@@ -4,8 +4,8 @@ Ops a 100 TB LLM-data pipeline needs beyond per-row transforms, each
 expressed Spark-first and oracle-checked against DuckDB:
 
 - dedup clustering:   connected components over LSH candidate pairs
-                      (iterative min-label propagation; recursive-CTE
-                      oracle) — turns pairwise near-dup hits into
+                      (large-star/small-star contraction; recursive-
+                      CTE oracle) — turns pairwise near-dup hits into
                       keep/drop decisions
 - repetition signals: Gopher-style quality stats (top-token /
                       top-bigram fractions, distinct-token ratio)
@@ -45,71 +45,6 @@ from .text import (FUZZY_PAIRS_CTE_SQL, GOPHER_MAX_MEAN_LEN,
                    GOPHER_MIN_STOPWORDS, GOPHER_MIN_WORDS, _HITS_SQL)
 
 # --- C2+: dedup clustering (connected components) -------------------------
-
-
-def dedup_clusters_minlabel(documents: DataFrame) -> DataFrame:
-    """TEST-ONLY equivalence audit kernel for `dedup_clusters` — NOT
-    registered (VERDICT r13 item 1, the q_bitext_mine precedent one
-    family later): min-label propagation converges in O(graph
-    diameter) SEQUENTIAL rounds, and the r13 bench proved the
-    degradation is real serialization, not box noise — at sf1 its
-    wall hit 24.3 s (slope 6.83) at the SAME process-tree CPU as the
-    O(log n) star kernel's 7.8 s (slope 2.07): the cluster sits idle
-    between barriers as the amplified corpus's duplicate components
-    grow longer chains.  The registered `q_dedup_clusters` rides the
-    star kernel; this form survives only as the independent
-    implementation the equivalence property in test_pipeline checks
-    the star labels against.
-
-    Algorithm: iterative min-label propagation — each round every node
-    takes ``min(own label, neighbors' labels)``; fixpoint = component
-    minimum.  Rounds are plain shuffles (join + groupBy), converging in
-    O(graph diameter).
-
-    Scale design: iteration runs ONLY over nodes that appear in an edge
-    (near-dup graphs are sparse — the overwhelming majority of docs are
-    singletons and never enter the loop); singletons are restored with
-    a left join at the end.  ``localCheckpoint`` truncates the lineage
-    each round so the plan doesn't grow exponentially.  Convergence is
-    detected by the (monotonically decreasing) sum of labels — one
-    scalar per round to the driver, never rows.
-    """
-    pairs = minhash_lsh_pairs(documents).select("doc_a", "doc_b")
-    edges = (pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-             .union(pairs.select(F.col("doc_b").alias("src"),
-                                 F.col("doc_a").alias("dst")))
-             .localCheckpoint(eager=True))
-    labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-              .withColumn("cluster_id", F.col("doc_id"))
-              .localCheckpoint(eager=True))
-    prev_sum = None
-    converged = False
-    for _ in range(30):  # diameter bound; tiny for near-dup chains
-        msgs = (edges.join(labels, edges.src == labels.doc_id)
-                .select(F.col("dst").alias("doc_id"), "cluster_id"))
-        # lazy checkpoint: the convergence aggregate below materializes
-        # it in the same job (eager=True would cost a second job/round)
-        labels = (labels.union(msgs)
-                  .groupBy("doc_id").agg(F.min("cluster_id").alias("cluster_id"))
-                  .localCheckpoint(eager=False))
-        cur_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # silent non-convergence would emit non-minimal (wrong)
-        # cluster ids; refuse like the star kernel does (a component
-        # with diameter > 30 needs dedup_clusters' O(log n) star
-        # rounds, not more propagation)
-        raise RuntimeError(
-            "min-label propagation did not converge within 30 rounds; "
-            "use connected_components_star for long-chain graphs")
-    return (documents.select("doc_id")
-            .join(labels, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"))
-            .withColumn("is_keeper", F.col("cluster_id") == F.col("doc_id")))
 
 
 def connected_components_star(edges: DataFrame,
@@ -205,10 +140,10 @@ def dedup_clusters(documents: DataFrame) -> DataFrame:
     sf1 slope 6.83 / wall 24.3 s at the same process-CPU as star's
     7.8 s — real serialization, degrading exactly when dedup matters
     most (template families and boilerplate farms make components
-    LONGER as the corpus grows).  The propagation form survives as
-    `dedup_clusters_minlabel`, the test-only independent
-    implementation the equivalence property checks this one against
-    (same component-min contract, same recursive-CTE oracle)."""
+    LONGER as the corpus grows).  The propagation form survives in
+    tests/reference_kernels.py as the independent implementation the
+    equivalence property checks this one against (same component-min
+    contract, same recursive-CTE oracle)."""
     pairs = minhash_lsh_pairs(documents).select("doc_a", "doc_b")
     labels, _ = connected_components_star(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")))
@@ -549,61 +484,15 @@ def repetition_signals(documents: DataFrame) -> DataFrame:
     is a per-row computation with ZERO shuffles; the op scales as a
     pure scan and is partition-layout invariant by construction.
     Since r14 the counting rides :func:`_repetition_counts_np`
-    (the expression form's array_sort + struct-state `aggregate()`
-    folds are interpreted per element — the assignment-kernel
-    finding); ``HK_REPSTATS_KERNEL=expr`` keeps the higher-order
-    expression form selectable for the value-identity pin.  (History:
-    the explode → groupBy(doc, gram) → groupBy(doc) form before r4
-    shuffled distinct-gram rows twice to recompute co-location Spark
-    already had — 2.0s vs 2.3s at sf0.1 and two exchanges dropped.)
-    All ratios derive from integer counts → bit-exact across engines;
-    round(6) for display."""
-    if __import__("os").environ.get("HK_REPSTATS_KERNEL", "np") == "np":
-        stats = _repetition_counts_np(documents).filter(F.col("tok_n") > 0)
-        return (stats
-                .select("doc_id",
-                        F.col("tok_n").alias("n_tok"),
-                        F.round(F.col("tok_distinct") / F.col("tok_n"), 6)
-                        .alias("uniq_tok_frac"),
-                        F.round(F.col("tok_top") / F.col("tok_n"), 6)
-                        .alias("top_tok_frac"),
-                        F.round(F.col("bg_top") / F.col("bg_n"), 6)
-                        .alias("top_bigram_frac"),
-                        F.round(F.col("tok_chars") / F.col("tok_n"), 6)
-                        .alias("mean_tok_len")))
-    toks = ws_tokens("text")
-    pos = F.sequence(F.lit(1), F.greatest(F.size(toks) - 1, F.lit(1)))
-    bigrams = F.transform(pos, lambda i: F.concat_ws(" ", F.slice(toks, i, 2)))
-
-    def top_run(arr):
-        # longest run of equal values in sorted(arr): fold with state
-        # (prev, run, best); arrays here are never empty (guarded below)
-        state = F.struct(F.lit(None).cast("string").alias("prev"),
-                         F.lit(0).cast("bigint").alias("run"),
-                         F.lit(0).cast("bigint").alias("best"))
-        def step(acc, x):
-            run = F.when(acc.prev.isNotNull() & (x == acc.prev),
-                         acc.run + 1).otherwise(F.lit(1).cast("bigint"))
-            return F.struct(x.alias("prev"), run.alias("run"),
-                            F.greatest(acc.best, run).alias("best"))
-        return F.aggregate(F.array_sort(arr), state, step, lambda acc: acc.best)
-
-    char_sum = F.aggregate(
-        toks, F.lit(0).cast("bigint"),
-        lambda acc, t: acc + F.length(t).cast("bigint"))
-    stats = (documents
-             .select("doc_id", toks.alias("toks"), bigrams.alias("bgs"),
-                     char_sum.alias("tok_chars"))
-             .filter(F.size("toks") > 0)
-             .select(
-                 "doc_id",
-                 F.size("toks").cast("bigint").alias("tok_n"),
-                 F.size(F.array_distinct("toks")).cast("bigint")
-                 .alias("tok_distinct"),
-                 top_run(F.col("toks")).alias("tok_top"),
-                 "tok_chars",
-                 F.size("bgs").cast("bigint").alias("bg_n"),
-                 top_run(F.col("bgs")).alias("bg_top")))
+    (the r13 expression form's array_sort + struct-state
+    `aggregate()` folds were interpreted per element — the
+    assignment-kernel finding; value-identity pinned in
+    test_sign_kernels).  (History: the explode → groupBy(doc, gram)
+    → groupBy(doc) form before r4 shuffled distinct-gram rows twice
+    to recompute co-location Spark already had — 2.0s vs 2.3s at
+    sf0.1 and two exchanges dropped.)  All ratios derive from integer
+    counts → bit-exact across engines; round(6) for display."""
+    stats = _repetition_counts_np(documents).filter(F.col("tok_n") > 0)
     return (stats
             .select("doc_id",
                     F.col("tok_n").alias("n_tok"),
@@ -1188,26 +1077,16 @@ def cms_sketch(documents: DataFrame, d: int = CMS_D,
     into the corpus sketch bit-identically (the mergeability the
     streaming maintenance in streaming/sketch.py relies on).
 
-    Default-rides :func:`_cms_partials_np` since r14
-    (``HK_CMS_KERNEL=expr`` keeps the expression form selectable): the
-    expression build explodes every token d ways and salted-md5-hashes
-    each of the d·|tokens| rows through interpreted conv/pmod — while
-    the Arrow pass Counter-aggregates tokens per batch first, hashes
-    each DISTINCT token's d cells once, and emits ≤ d·w exact integer
-    partials per batch that the groupBy SUMs (associative, so any
-    batch boundary yields the identical matrix)."""
-    if __import__("os").environ.get("HK_CMS_KERNEL", "np") == "np":
-        return (_cms_partials_np(documents, d, w)
-                .groupBy("r", "c")
-                .agg(F.sum("pn").alias("n")))
-    toks = documents.select(F.explode(ws_tokens("text")).alias("token"))
-    rows = toks.select(
-        "token",
-        F.explode(F.array(*[F.lit(r) for r in range(d)])).alias("r"))
-    return (rows.select("r", _cms_cell(F.col("r"), F.col("token"), w)
-                        .alias("c"))
+    Built by :func:`_cms_partials_np` (r14): the Arrow pass
+    Counter-aggregates tokens per batch, hashes each DISTINCT token's
+    d cells once, and emits ≤ d·w exact integer partials per batch
+    that the groupBy SUMs (associative, so any batch boundary yields
+    the identical matrix).  The r13 expression build exploded every
+    token d ways and salted-md5-hashed each of the d·|tokens| rows
+    through interpreted conv/pmod."""
+    return (_cms_partials_np(documents, d, w)
             .groupBy("r", "c")
-            .agg(F.count(F.lit(1)).alias("n")))
+            .agg(F.sum("pn").alias("n")))
 
 
 def _cms_partials_np(documents: DataFrame, d: int = CMS_D,

@@ -32,26 +32,6 @@ from ..spec import Spec, sql_in_list
 N_PLANES = 8   # LSH signature bits
 DIM = 64       # embedding dimensionality (FIXTURES.md §B)
 
-#: Lloyd-loop lineage-truncation cadence, A/B-switchable for the r6
-#: VERDICT item-1 measurement (HK_LLOYD_CKPT = eager | lazy | final).
-_LLOYD_CKPT_MODE = __import__("os").environ.get("HK_LLOYD_CKPT", "eager")
-
-
-def _lloyd_ckpt(df: DataFrame, is_last: bool) -> DataFrame:
-    """Per-iteration lineage truncation for the Lloyd loops.  All
-    modes return a plan-truncated DataFrame with bit-identical
-    contents; they differ only in WHEN the tiny centroid table
-    materializes (see kmeans_centroids docstring for the measured
-    A/B)."""
-    if _LLOYD_CKPT_MODE == "lazy":
-        return df.localCheckpoint(eager=False)
-    if _LLOYD_CKPT_MODE == "none":
-        return df
-    if _LLOYD_CKPT_MODE == "final":
-        return df.localCheckpoint(eager=True) if is_last else df
-    return df.localCheckpoint(eager=True)
-
-
 def topk_cosine(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
     """Brute-force cosine top-k against one stored query vector.
 
@@ -120,23 +100,24 @@ def _plane_weights(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[float]
             for p in range(n_planes)]
 
 
-def _lsh_signature_np(embeddings: DataFrame, n_planes: int) -> DataFrame:
-    """Arrow-vectorized twin of the sign-LSH signature (the
-    `_assign_cells_np` pattern applied to the OTHER per-vector trainer
-    primitive): one mapInPandas pass computes all ``n_planes`` plane
-    dots per batch instead of n_planes interpreted
+def lsh_signature(embeddings: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
+    """B-bit sign-LSH signature per vector.
+
+    bit_p = 1 iff Σ_d w(p,d)·v_d > 0, folded in index order against a
+    constant weight matrix.  One mapInPandas pass computes all
+    ``n_planes`` plane dots per batch instead of n_planes interpreted
     ``zip_with``/``aggregate`` folds per row (CodegenFallback — the
     r14 profile put the 16-plane signature at 1.2 s wall / 2.5 CPU-s
     for just 2000 sf0.1 vectors, ~0.6 ms per vector of pure
     interpreter overhead).
 
-    Bit-discipline: distances accumulate ``v_d · w_d`` in float64 in
+    Bit-discipline: dots accumulate ``v_d · w_d`` in float64 in
     dimension order — the JVM fold's exact IEEE sequence (weights are
     ±1.0, so each term is an exact sign flip of ``v_d``) — and the
-    bit is the same strict ``dot > 0``.  Signatures are therefore
-    bit-identical (pinned in tests/test_sign_kernels.py).  Map-only
-    like the expression form: no shuffle, input partitioning
-    preserved."""
+    bit is the strict ``dot > 0``, so signatures are bit-identical to
+    the literal-array expression form (pinned in
+    tests/test_sign_kernels.py).  Map-only: no shuffle, input
+    partitioning preserved."""
     import numpy as np
 
     W = np.asarray(_plane_weights(n_planes), dtype=np.float64)
@@ -165,32 +146,6 @@ def _lsh_signature_np(embeddings: DataFrame, n_planes: int) -> DataFrame:
                 "bucket": ["".join(row) for row in chars]})
 
     return src.mapInPandas(sign, f"vec_id {vt}, label {lt}, bucket string")
-
-
-def lsh_signature(embeddings: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
-    """B-bit sign-LSH signature per vector.
-
-    bit_p = 1 iff Σ_d w(p,d)·v_d > 0, folded in index order against a
-    constant weight matrix.  Since r14 the default rides
-    :func:`_lsh_signature_np` (Catalyst higher-order functions are
-    interpreted per element — the same finding that flipped the
-    assignment kernel); ``HK_SIGN_KERNEL=expr`` keeps the
-    literal-array expression form selectable for the bit-identity
-    pins."""
-    if __import__("os").environ.get("HK_SIGN_KERNEL", "np") == "np":
-        return _lsh_signature_np(embeddings, n_planes)
-    weights = _plane_weights(n_planes)
-
-    def bit(p: int) -> Column:
-        w = F.array(*[F.lit(x) for x in weights[p]])
-        dot = F.aggregate(
-            F.zip_with(F.col("embedding"), w,
-                       lambda v, wv: v.cast("double") * wv),
-            F.lit(0.0), lambda acc, x: acc + x)
-        return F.when(dot > 0, F.lit(1)).otherwise(F.lit(0))
-
-    sig = F.concat_ws("", *[bit(p).cast("string") for p in range(n_planes)])
-    return embeddings.select("vec_id", "label", sig.alias("bucket"))
 
 
 def ann_lsh_pairs(embeddings: DataFrame, min_cosine: float = 0.2) -> DataFrame:
@@ -285,72 +240,14 @@ def dedup_embedding_pairs(embeddings: DataFrame, min_cosine: float = 0.4,
     va, vb = withn.alias("va"), withn.alias("vb")
     joined = (cand.join(va, cand.vec_a == F.col("va.vec_id"))
               .join(vb, cand.vec_b == F.col("vb.vec_id")))
-    # The exact verify: r14 measured the Arrow twin a WASH at sf0.1
-    # (1.68 s/18.3 CPU-s vs 1.66/17.2 — the pair transfer costs what
-    # the interpreted fold saves) and kept the expression; the r15
-    # sf1 re-measure (VERDICT r14 item 6) is recorded in
-    # OPTIMIZATION_r15.md — HK_VERIFY_KERNEL=np selects the twin,
-    # value-identity pinned in test_similarity.
-    if __import__("os").environ.get("HK_VERIFY_KERNEL", "expr") == "np":
-        scored = _pair_cosine_np(joined)
-    else:
-        sim = cosine_from_norms(F.col("va.embedding"),
-                                F.col("vb.embedding"),
-                                F.col("va.nrm"), F.col("vb.nrm"))
-        scored = joined.select("vec_a", "vec_b",
-                               F.round(sim, 6).alias("cosine_sim"))
-    return scored.filter(F.col("cosine_sim") >= min_cosine)
-
-
-def _pair_cosine_np(joined: DataFrame) -> DataFrame:
-    """Arrow twin of the pair-verify cosine fold: per batch, the dot
-    accumulates per dimension in index order (the JVM ``aggregate``
-    fold's IEEE sequence), divides by the SUPPLIED norms (same
-    operand order: dot / (na·nb)) and rounds HALF_UP at 6 dp via the
-    repo's rint+boundary-requantize convention — bit-identical to
-    ``round(cosine_from_norms(..), 6)``."""
-    src = joined.select("vec_a", "vec_b",
-                        F.col("va.embedding").alias("ea"),
-                        F.col("vb.embedding").alias("eb"),
-                        F.col("va.nrm").alias("na"),
-                        F.col("vb.nrm").alias("nb"))
-    vt = src.schema["vec_a"].dataType.simpleString()
-
-    def kern(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import numpy as np
-        import pandas as pd
-
-        grid = Decimal("1e-6")
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            D = len(pdf["ea"].iloc[0])
-            A = np.empty((n, D), dtype=np.float64)
-            B = np.empty((n, D), dtype=np.float64)
-            for i, (a, b) in enumerate(zip(pdf["ea"], pdf["eb"])):
-                A[i] = np.asarray(a, dtype=np.float64)
-                B[i] = np.asarray(b, dtype=np.float64)
-            dot = np.zeros(n, dtype=np.float64)
-            for d in range(D):              # JVM fold order
-                dot += A[:, d] * B[:, d]
-            cs = dot / (pdf["na"].to_numpy() * pdf["nb"].to_numpy())
-            s = cs * 1e6
-            r = np.rint(s)
-            sus = (np.abs(np.abs(s - r) - 0.5) < 1e-3) | (np.abs(s) > 1e14)
-            if sus.any():
-                for i in np.nonzero(sus)[0]:
-                    d6 = Decimal(repr(float(cs[i]))).quantize(
-                        grid, ROUND_HALF_UP)
-                    r[i] = float(d6.scaleb(6))
-            yield pd.DataFrame({"vec_a": pdf["vec_a"],
-                                "vec_b": pdf["vec_b"],
-                                "cosine_sim": r / 1e6})
-
-    return src.mapInPandas(
-        kern, f"vec_a {vt}, vec_b {vt}, cosine_sim double")
+    # The exact verify stays an expression: the r14 Arrow twin was a
+    # wash at sf0.1 (the pair transfer costs what the interpreted fold
+    # saves) and lost at sf1 (OPTIMIZATION_r15.md).
+    sim = cosine_from_norms(F.col("va.embedding"), F.col("vb.embedding"),
+                            F.col("va.nrm"), F.col("vb.nrm"))
+    return (joined.select("vec_a", "vec_b",
+                          F.round(sim, 6).alias("cosine_sim"))
+            .filter(F.col("cosine_sim") >= min_cosine))
 
 
 N_CENTROIDS = 8
@@ -396,26 +293,31 @@ def _l2sq(a: Column, b: Column) -> Column:
         F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _assign_cells_np(embeddings: DataFrame, cent: DataFrame,
-                     keep_dist: bool = False,
-                     keep_residual: bool = False) -> DataFrame:
-    """Arrow-vectorized twin of the broadcast-join assignment
-    (``HK_ASSIGN_KERNEL=np``) — same contract, same bits, ~10× the
-    per-core throughput.
+def _assign_cells(embeddings: DataFrame, cent: DataFrame,
+                  keep_dist: bool = False,
+                  keep_residual: bool = False) -> DataFrame:
+    """Nearest-centroid assignment (L2, ties → lowest cid), one Arrow
+    pass over the vectors against the broadcast centroid table.
+    Distances round to 9 dp so cross-engine last-bit drift can't flip
+    an argmin.  ``keep_dist=True`` carries the argmin distance through
+    (the prototypicality score) — one assignment body for every
+    consumer instead of a third copy of the rounding/tie discipline
+    (ADVICE r11).
 
-    Why it exists: the join kernel materializes n·K candidate ROWS and
-    evaluates ``_l2sq`` through ``zip_with``/``aggregate`` — Catalyst
-    higher-order functions are CodegenFallback (interpreted per
-    element), so assignment pays interpreted work on n·K·D elements.
-    With the r13 corpus-derived K (K ∝ n/250) that term is the one
-    measured SUPERLINEAR cpu_sec in the tracked sf1 set (q_proto_prune
-    123.4 process-CPU-s at sf1 vs 2.4 at sf0.1 — 51× for 10× data,
-    every non-Lloyd query sits in the 10–18× band).  Dense
+    Why a numpy kernel: the r13 broadcast-join form materialized n·K
+    candidate ROWS and evaluated ``_l2sq`` through
+    ``zip_with``/``aggregate`` — Catalyst higher-order functions are
+    CodegenFallback (interpreted per element), so assignment paid
+    interpreted work on n·K·D elements.  With the r13 corpus-derived
+    K (K ∝ n/250) that term was the one measured SUPERLINEAR cpu_sec
+    in the tracked sf1 set (q_proto_prune 123.4 process-CPU-s at sf1
+    vs 2.4 at sf0.1 — 51× for 10× data).  Dense
     argmin-over-centroids is the canonical Arrow-batch case the repo's
     UDF policy reserves pandas kernels for: one numpy fold does the
     same FLOPs fused, and the n·K row explosion never exists.
 
-    Bit-discipline (the reason this is a twin, not a rewrite):
+    Bit-discipline (identical to the join form kept as the test
+    reference):
 
     - distances accumulate ``(x_d - c_d)²`` in float64 in dimension
       order — elementwise IEEE ops in a d-loop reproduce the JVM
@@ -514,86 +416,29 @@ def _assign_cells_np(embeddings: DataFrame, cent: DataFrame,
     return src.mapInPandas(assign, out_schema)
 
 
-def _assign_cells(embeddings: DataFrame, cent: DataFrame,
-                  keep_dist: bool = False) -> DataFrame:
-    """Nearest-centroid assignment (L2, ties → lowest cid): centroid
-    table broadcast, one scan over the vectors.  Distances round to
-    9 dp so cross-engine last-bit drift can't flip an argmin.
-    ``keep_dist=True`` carries the argmin distance through (the
-    prototypicality score) — one assignment body for every consumer
-    instead of a third copy of the rounding/tie discipline (ADVICE
-    r11).
-
-    The argmin is ``min(struct(dist, cid))`` — lexicographic struct
-    ordering IS the (dist, then cid) tie discipline — NOT a
-    row_number window: the aggregate partially combines map-side, so
-    the K candidate rows per vector collapse to one *before* the
-    exchange (shuffle carries n rows, not n·K, and nothing sorts),
-    while the window form shuffles all n·K rows and sorts every
-    partition.  Measured at sf0.1 (same-JVM A/B, median of 3, results
-    bit-identical): q_ann_ivf 2.07→1.93s, q_ann_pq 3.50→3.06s — local
-    runs are stage-overhead-bound, so the n·K→n shuffle-volume cut is
-    the larger effect at scale.
-
-    Since r14 the DEFAULT routes to :func:`_assign_cells_np`, the
-    bit-identical Arrow-vectorized twin (same rounded-argmin contract,
-    no n·K row explosion) — the measured A/B (SCALE.md round 14)
-    halves trainer wall at sf0.1 and cuts sf1 trainer CPU ~45%.
-    ``HK_ASSIGN_KERNEL=join`` keeps this broadcast-join kernel
-    selectable for the equivalence pins in tests/test_assign_kernel.py."""
-    if __import__("os").environ.get("HK_ASSIGN_KERNEL", "np") == "np":
-        return _assign_cells_np(embeddings, cent, keep_dist)
-    d = (embeddings.select("vec_id", "embedding")
-         .crossJoin(F.broadcast(cent))
-         .select("vec_id", "cid",
-                 F.round(_l2sq(F.col("embedding"), F.col("cemb")), 9).alias("dist")))
-    assigned = (d.groupBy("vec_id")
-                .agg(F.min(F.struct("dist", "cid")).alias("m"))
-                .select("vec_id", F.col("m.cid").alias("cell"),
-                        F.col("m.dist").alias("dist")))
-    return assigned if keep_dist else assigned.drop("dist")
-
-
 def _cells_and_residuals(vectors: DataFrame,
                          cent: DataFrame) -> tuple[DataFrame, DataFrame]:
     """ONE corpus pass for the residual-IVFPQ build prologue (r15,
     VERDICT r14 item 2): returns ``(cells, res)`` — the coarse
     assignment and the residual relation ``x − c(cell(x))`` — computed
-    together.  Under the default Arrow kernel the residual is emitted
-    from the same batch as the argmin (`_assign_cells_np`
-    ``keep_residual=True``), so the second corpus scan, the
-    (embeddings ⋈ cells) n-row join with its two exchanges, and the
-    interpreted per-element ``zip_with`` subtraction all disappear;
-    one eager ``localCheckpoint`` materializes both outputs (the
-    residual chain's lineage-truncation contract, VERDICT r5 item 1).
-    ``HK_ASSIGN_KERNEL=join`` or ``HK_RESIDUAL_KERNEL=join`` keep the
-    original two-pass join form — the independent reference
-    implementation the bit-identity test pins this against (the
-    latter isolates just the residual fusion for A/B)."""
-    env = __import__("os").environ
-    if (env.get("HK_ASSIGN_KERNEL", "np") == "np"
-            and env.get("HK_RESIDUAL_KERNEL", "np") == "np"):
-        assigned = _assign_cells_np(vectors, cent, keep_residual=True) \
-            .localCheckpoint(eager=True)
-        return (assigned.select("vec_id", "cell"),
-                assigned.select("vec_id",
-                                F.col("residual").alias("embedding")))
-    cells = _assign_cells(vectors, cent).localCheckpoint(eager=True)
-    res = (vectors.select("vec_id", "embedding")
-           .join(cells, "vec_id")
-           .join(F.broadcast(cent), F.col("cell") == F.col("cid"))
-           .select("vec_id",
-                   F.zip_with("embedding", "cemb",
-                              lambda x, c: x.cast("double") - c)
-                   .alias("embedding"))
-           .localCheckpoint(eager=True))
-    return cells, res
+    together.  The residual is emitted from the same batch as the
+    argmin (`_assign_cells` ``keep_residual=True``), so there is no
+    second corpus scan, no (embeddings ⋈ cells) n-row join and no
+    interpreted per-element ``zip_with`` subtraction; one eager
+    ``localCheckpoint`` materializes both outputs (the residual
+    chain's lineage-truncation contract, VERDICT r5 item 1).  The
+    two-pass join form is the test reference (tests/
+    reference_kernels.py)."""
+    assigned = _assign_cells(vectors, cent, keep_residual=True) \
+        .localCheckpoint(eager=True)
+    return (assigned.select("vec_id", "cell"),
+            assigned.select("vec_id", F.col("residual").alias("embedding")))
 
 
 def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
     """Fused Lloyd-iteration body (r15): ONE Arrow pass assigns each
     vector to its nearest centroid (the identical argmin discipline of
-    `_assign_cells_np`) and accumulates the per-cell member sums as
+    `_assign_cells`) and accumulates the per-cell member sums as
     exact scaled-int64 partials IN THE SAME BATCH.  The per-iteration
     (embeddings ⋈ assignment) join with its two n-row exchanges and
     the n·D ``posexplode`` Generate disappear; the shuffle carries
@@ -658,7 +503,7 @@ def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
             X = np.empty((n, D), dtype=np.float64)
             for i, e in enumerate(pdf["embedding"]):
                 X[i] = np.asarray(e, dtype=np.float64)
-            # assignment: identical discipline to _assign_cells_np
+            # assignment: identical discipline to _assign_cells
             step = max(1, (4 << 20) // max(K, 1))
             lab = np.empty(n, dtype=np.int64)     # index into C_l
             for lo in range(0, n, step):
@@ -679,7 +524,12 @@ def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
                     lab[lo + i] = best[2]
             # int64 headroom: per-cell sums of ≤n scaled values must
             # stay < 2^62 (fixture values are O(1) — see covariance)
-            assert float(np.abs(X).max(initial=0.0)) * 1e10 * n < 2 ** 62
+            mx = float(np.abs(X).max(initial=0.0))
+            if mx * 1e10 * n >= 2 ** 62:
+                raise OverflowError(
+                    f"kmeans mean-partials int64 headroom guard: "
+                    f"max |x| {mx:g} over {n} rows overflows the "
+                    f"1e-10-scaled int64 sums")
             Q = q10(X)
             order = np.argsort(lab, kind="stable")
             sl = lab[order]
@@ -698,25 +548,6 @@ def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
             .agg((F.sum("s").cast("double") / F.sum("c")).alias("m")))
 
 
-def _lloyd_means(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
-    """Per-iteration member means, routed: the fused Arrow partials
-    kernel by default; ``HK_LLOYD_MEANS=expr`` isolates the means
-    change for A/B, and ``HK_ASSIGN_KERNEL=join`` selects the complete
-    expression reference pipeline (assignment join + posexplode +
-    decimal hash aggregate) exactly as before r15."""
-    env = __import__("os").environ
-    if (env.get("HK_LLOYD_MEANS", "np") == "np"
-            and env.get("HK_ASSIGN_KERNEL", "np") == "np"):
-        return _mean_partials_np(embeddings, cent)
-    assign = _assign_cells(embeddings, cent)
-    exploded = (embeddings.select("vec_id", "embedding")
-                .join(assign, "vec_id")
-                .select("cell", F.posexplode("embedding").alias("pos", "val")))
-    return (exploded.groupBy("cell", "pos")
-            .agg((F.sum(F.col("val").cast("double").cast("decimal(30,10)"))
-                  .cast("double") / F.count(F.lit(1))).alias("m")))
-
-
 def kmeans_centroids(embeddings: DataFrame,
                      n_centroids: int | None = None,
                      iters: int = IVF_ITERS) -> DataFrame:
@@ -732,15 +563,16 @@ def kmeans_centroids(embeddings: DataFrame,
     explicitly pins K.  The oracles derive the same K in SQL
     (`_derived_k_sql`).
 
-    Each round is the same broadcast-assignment join; the mean is a
-    posexplode → groupBy(cell, dim) → rebuild-array pipeline (K·D
-    tiny rows out).  Means accumulate in DECIMAL(30,10) — exact and
-    summation-order independent — then divide as double, so Spark and
-    DuckDB produce bit-identical centroids regardless of partitioning
-    (a raw double sum would drift with partition order and could flip
-    downstream argmins).  A centroid that loses every member simply
-    drops out (deterministic in both engines; K shrinks).  At scale:
-    iteration cost = iters × (scan + K·D-row shuffle) — the standard
+    Each round is ONE Arrow pass (`_mean_partials_np`): assign every
+    vector to its nearest centroid and emit exact per-cell partial
+    sums, so the exchange carries ≤K·D rows per batch.  Means
+    accumulate in DECIMAL(30,10) — exact and summation-order
+    independent — then divide as double, so Spark and DuckDB produce
+    bit-identical centroids regardless of partitioning (a raw double
+    sum would drift with partition order and could flip downstream
+    argmins).  A centroid that loses every member simply drops out
+    (deterministic in both engines; K shrinks).  At scale: iteration
+    cost = iters × (scan + K·D-row shuffle) — the standard
     distributed k-means shape.
 
     Each iteration's centroid table is eagerly ``localCheckpoint``ed
@@ -750,55 +582,27 @@ def kmeans_centroids(embeddings: DataFrame,
     training cost grows quadratically in ``iters`` and every
     downstream consumer (probe, final assignment) re-derives the whole
     chain.  Checkpointing is a pure lineage truncation — the math is
-    bit-identical (VERDICT r5 item 1).
-
-    Cadence A/B (VERDICT r6 item 1a — was the per-iteration eager
-    barrier taxing single-chain consumers?).  Measured at sf0.1,
-    local[32], one FRESH JVM per mode, warm-up + median-of-3 per
-    query, two independent passes (``HK_LLOYD_CKPT`` switches the
-    mode via :func:`_lloyd_ckpt`; all modes hash-identical):
-
-    ==========  ======================  =========  ==============
-    mode        q_dedup_semantic (s)    ivfpq (s)  6-query total
-    ==========  ======================  =========  ==============
-    eager       3.84 / 3.19             5.01/4.37  21.2 / 18.4
-    lazy        4.10                    4.79       20.1
-    final-only  3.79 / 3.13             4.20/4.50  19.2 / 18.9
-    none        3.35                    3.51       20.6 (residual 6.96!)
-    ==========  ======================  =========  ==============
-
-    Verdict: the cadence effect is SMALLER than same-box JVM variance
-    (the two eager passes differ by 2.8 s on the total; per-query
-    swings of ±20 % flip the mode ordering between passes), and even
-    with ZERO in-loop checkpoints q_dedup_semantic never returns to
-    its r5 number — so the r6-flagged "×1.45 checkpoint tax" was
-    predominantly bench-protocol noise, now pinned by bench.py's
-    per-query spread recording + fresh-JVM outlier rerun.  ``eager``
-    stays the default: it is the only mode that bounds lineage depth
-    at EVERY iteration (the property that fixed the residual chain —
-    ``none`` re-breaks it, 4.6 → 7.0 s), and at cluster scale a K·D-row
-    materialization barrier is noise while an unbounded lineage replay
-    is not."""
+    bit-identical (VERDICT r5 item 1).  Eager, at every iteration:
+    the r6 cadence A/B (lazy, final-only, none) found no mode faster
+    beyond same-box JVM variance, and only the eager per-iteration
+    barrier bounds lineage depth at EVERY iteration — dropping it
+    re-broke the residual chain (4.6 → 7.0 s); at cluster scale a
+    K·D-row materialization barrier is noise while an unbounded
+    lineage replay is not."""
     if n_centroids is None:
         n_centroids = derived_n_centroids(embeddings.count())
     cent = (embeddings.filter(F.col("vec_id") < n_centroids)
             .select(F.col("vec_id").cast("int").alias("cid"),
                     F.transform("embedding",
                                 lambda x: x.cast("double")).alias("cemb")))
-    for it in range(iters):
-        # since r15 the per-iteration (assign → join-back → posexplode
-        # → decimal hash agg) body routes through _lloyd_means — the
-        # fused Arrow partials kernel by default (one corpus pass per
-        # iteration, ≤K·D-row exchange), the expression form under
-        # HK_LLOYD_MEANS=expr / HK_ASSIGN_KERNEL=join
-        means = _lloyd_means(embeddings, cent)
-        cent = _lloyd_ckpt(
-            means.groupBy("cell")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.m).alias("cemb"))
-            .select(F.col("cell").alias("cid"), "cemb"),
-            is_last=it == iters - 1)
+    for _ in range(iters):
+        cent = (_mean_partials_np(embeddings, cent)
+                .groupBy("cell")
+                .agg(F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s.m).alias("cemb"))
+                .select(F.col("cell").alias("cid"), "cemb")
+                .localCheckpoint(eager=True))
     return cent
 
 
@@ -934,96 +738,6 @@ def _pq_subspaces(m: int = PQ_M, sub_dim: int = PQ_SUB_DIM):
         for j in range(m)])
 
 
-def _assign_sub_np(staged: DataFrame, cent: DataFrame) -> DataFrame:
-    """Arrow twin of the per-(vector, subspace) assignment — the
-    `_assign_cells_np` pattern with the subspace id as an extra
-    grouping key.  Same bit-discipline: per-dimension accumulation in
-    index order (the JVM fold's IEEE sequence), argmin over HALF_UP-
-    rounded-9dp distances with ties → lowest cid via exact
-    ``Decimal(repr(d))`` on the few candidates within 2e-9 of the
-    unrounded minimum.  The n·m·K candidate row explosion and its
-    map-side-combined exchange disappear; the m·k codebook rides a
-    SparkContext broadcast.  Pinned bit-identical in
-    tests/test_assign_kernel.py."""
-    import numpy as np
-
-    # bounded collect: ≤ m·k codebook rows
-    rows = cent.select("j", "cid", "cemb").collect()
-    by_j: dict[int, list] = {}
-    for r in rows:
-        by_j.setdefault(int(r.j), []).append((int(r.cid), list(r.cemb)))
-    packed = {
-        j: (np.asarray([c for c, _ in sorted(v)], dtype=np.int64),
-            np.asarray([e for _, e in sorted(v)], dtype=np.float64))
-        for j, v in by_j.items()}
-    spark = staged.sparkSession
-    b_cent = spark.sparkContext.broadcast(packed)
-    src = staged.select("vec_id", "j", "sub")
-    vt = src.schema["vec_id"].dataType.simpleString()
-
-    def assign(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import numpy as np
-        import pandas as pd
-
-        cb = b_cent.value
-        grid = Decimal("1e-9")
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            js = pdf["j"].to_numpy()
-            subs = pdf["sub"].to_numpy()
-            cells = np.empty(n, dtype=np.int64)
-            for j in np.unique(js):
-                cids, C = cb[int(j)]
-                K, D = C.shape
-                idx = np.nonzero(js == j)[0]
-                X = np.stack([np.asarray(subs[i], dtype=np.float64)
-                              for i in idx])
-                acc = np.zeros((len(idx), K), dtype=np.float64)
-                for d in range(D):          # JVM fold order
-                    t = X[:, d, None] - C[None, :, d]
-                    acc += t * t
-                m = acc.min(axis=1)
-                for i in range(len(idx)):
-                    cand = np.nonzero(acc[i] <= m[i] + 2e-9)[0]
-                    best = None
-                    for c in cand:
-                        dj = Decimal(repr(float(acc[i, c]))).quantize(
-                            grid, ROUND_HALF_UP)
-                        if best is None or (dj, cids[c]) < best[:2]:
-                            best = (dj, cids[c])
-                    cells[idx[i]] = best[1]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"],
-                                "j": pdf["j"],
-                                "cell": cells.astype("int32")})
-
-    return src.mapInPandas(assign, f"vec_id {vt}, j int, cell int")
-
-
-def _assign_sub(staged: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid per (vector, subspace): centroids keyed by
-    (j, cid) broadcast; argmin with the same rounded-distance /
-    lowest-cid tie discipline as the IVF assignment — and the same
-    ``min(struct)`` partial-aggregating shape (see _assign_cells:
-    map-side combine collapses the K candidates per (vector,
-    subspace) before the exchange; a window would shuffle and sort
-    all n·m·K rows).  Since r14 the default rides
-    :func:`_assign_sub_np` under the SAME ``HK_ASSIGN_KERNEL``
-    switch as the coarse assignment (one flag flips every Lloyd
-    family)."""
-    if __import__("os").environ.get("HK_ASSIGN_KERNEL", "np") == "np":
-        return _assign_sub_np(staged, cent)
-    d = (staged.join(F.broadcast(cent), "j")
-         .select("vec_id", "j", "cid",
-                 F.round(_l2sq(F.col("sub"), F.col("cemb")), 9).alias("dist")))
-    return (d.groupBy("vec_id", "j")
-            .agg(F.min(F.struct("dist", "cid")).alias("m"))
-            .select("vec_id", "j", F.col("m.cid").alias("cell")))
-
-
 def _collect_codebook(cent: DataFrame):
     """Bounded collect of the (j, cid, cemb) codebook (≤ m·k rows),
     packed per subspace sorted by cid — shared by the fused PQ
@@ -1044,7 +758,7 @@ def _sub_mean_partials_np(vectors: DataFrame, cent: DataFrame,
                           sub_dim: int = PQ_SUB_DIM) -> DataFrame:
     """Fused PQ-Lloyd iteration body over the UNEXPLODED n-row vector
     relation (r15): subspace slicing, the per-(vector, subspace)
-    argmin (the `_assign_sub_np` bit discipline) and the per-(j, cell)
+    argmin (the `_assign_cells` bit discipline) and the per-(j, cell)
     member-sum partials all happen in ONE Arrow pass, so the n·m
     subspace Generate, the (vec_id, j) join-back with its exchanges
     and the n·m·sub_dim posexplode disappear; the shuffle carries
@@ -1090,7 +804,12 @@ def _sub_mean_partials_np(vectors: DataFrame, cent: DataFrame,
             X = np.empty((n, m * sub_dim), dtype=np.float64)
             for i, e in enumerate(pdf["embedding"]):
                 X[i] = np.asarray(e, dtype=np.float64)
-            assert float(np.abs(X).max(initial=0.0)) * 1e10 * n < 2 ** 62
+            mx = float(np.abs(X).max(initial=0.0))
+            if mx * 1e10 * n >= 2 ** 62:
+                raise OverflowError(
+                    f"PQ sub-mean-partials int64 headroom guard: "
+                    f"max |x| {mx:g} over {n} rows overflows the "
+                    f"1e-10-scaled int64 sums")
             js, cells_o, poss, ss, cs = [], [], [], [], []
             for j in sorted(cb):
                 cids, C = cb[j]
@@ -1135,19 +854,19 @@ def _sub_mean_partials_np(vectors: DataFrame, cent: DataFrame,
         .agg((F.sum("s").cast("double") / F.sum("c")).alias("m")))
 
 
-def _codes_np(vectors: DataFrame, cent: DataFrame, m: int = PQ_M,
-              sub_dim: int = PQ_SUB_DIM) -> DataFrame:
-    """Final PQ code assignment emitted WIDE in one Arrow pass (r15):
-    (vec_id, code0..code{m-1}) directly from the n-row vector
-    relation — the n·m subspace Generate, the per-(vector, subspace)
-    assignment rows and `_codes_wide`'s pivot groupBy (an n·m → n
-    exchange) all disappear; the pass is map-only.  Per-subspace
-    argmin follows the `_assign_sub_np` bit discipline exactly
-    (float64 dimension-order accumulation, HALF_UP-9dp rounded
-    comparison, ties → lowest cid) — value-identity with the staged
-    pipeline pinned in tests/test_assign_kernel.py."""
+def _encode_codes(vectors: DataFrame, book: DataFrame, m: int = PQ_M,
+                  sub_dim: int = PQ_SUB_DIM) -> DataFrame:
+    """Codebook encoder: vectors → wide (vec_id, code0..code{m-1})
+    rows in one map-only Arrow pass over the n-row vector relation —
+    no n·m subspace Generate, no per-(vector, subspace) assignment
+    rows, no pivot exchange.  Per-subspace argmin follows the
+    `_assign_cells` bit discipline exactly (float64 dimension-order
+    accumulation, HALF_UP-9dp rounded comparison, ties → lowest cid)
+    — value-identity with the staged explode/join/pivot pipeline
+    pinned in tests/test_assign_kernel.py.  Used for training's final
+    pass and for the frozen-codebook append encoders."""
     spark = vectors.sparkSession
-    b_cent = spark.sparkContext.broadcast(_collect_codebook(cent))
+    b_cent = spark.sparkContext.broadcast(_collect_codebook(book))
     src = vectors.select("vec_id", "embedding")
     vt = src.schema["vec_id"].dataType.simpleString()
     out_schema = f"vec_id {vt}, " + ", ".join(
@@ -1194,28 +913,6 @@ def _codes_np(vectors: DataFrame, cent: DataFrame, m: int = PQ_M,
     return src.mapInPandas(kern, out_schema)
 
 
-def _pq_fused() -> bool:
-    """True when the fused PQ training/encoding kernels are selected —
-    the default; HK_LLOYD_MEANS=expr or HK_ASSIGN_KERNEL=join select
-    the staged expression pipeline (the reference form)."""
-    env = __import__("os").environ
-    return (env.get("HK_LLOYD_MEANS", "np") == "np"
-            and env.get("HK_ASSIGN_KERNEL", "np") == "np")
-
-
-def _encode_codes(vectors: DataFrame, book: DataFrame, m: int = PQ_M,
-                  sub_dim: int = PQ_SUB_DIM) -> DataFrame:
-    """Frozen-codebook encoder: vectors → wide (vec_id, code*) rows.
-    Fused Arrow pass by default; the staged explode + `_assign_sub` +
-    `_codes_wide` pivot pipeline under the reference switches."""
-    if _pq_fused():
-        return _codes_np(vectors, book, m, sub_dim)
-    staged = (vectors.select("vec_id",
-                             F.explode(_pq_subspaces(m, sub_dim)).alias("s"))
-              .select("vec_id", "s.j", "s.sub"))
-    return _codes_wide(_assign_sub(staged, book), m)
-
-
 #: Per-process memo of passed seed-count guards, keyed on
 #: (corpus semanticHash, sorted inputFiles, seed_stride, k) — see
 #: pq_codes.  semanticHash identifies the LOGICAL PLAN only (and is
@@ -1241,48 +938,35 @@ def pq_codes(embeddings: DataFrame, m: int = PQ_M, sub_dim: int = PQ_SUB_DIM,
     a 100 TB embedding corpus scannable; codebook = one tiny
     (j, cid, cemb) table of m·k centroids.
 
-    All m codebooks train in ONE fused Lloyd loop over the exploded
-    (vec_id, j, slice) relation — subspace is just another grouping
-    key, so each iteration is one assignment join + one mean aggregate
-    for every subspace at once instead of m separate pipelines
-    (measured 5.0s → 3.9s at sf0.1 for the ADC query).  The math is
-    identical per subspace (decimal-exact means, rounded argmins), so
-    the per-subspace-chain DuckDB oracle verifies this fused form
-    unchanged.
+    All m codebooks train in ONE fused Lloyd loop — subspace is just
+    another grouping key, so each iteration is one corpus pass of
+    `_sub_mean_partials_np` for every subspace at once instead of m
+    separate pipelines, over the n-row vector relation (subspaces are
+    sliced in the kernel; the n·m exploded relation never exists).
+    The math is identical per subspace (decimal-exact means, rounded
+    argmins), so the per-subspace-chain DuckDB oracle verifies this
+    fused form unchanged.
 
     As in :func:`kmeans_centroids`, each iteration's codebook is
     eagerly ``localCheckpoint``ed (m·k rows) so assignment lineage
     stays one-iteration deep instead of re-executing the whole
     training prefix per evaluation (VERDICT r5 item 1)."""
-    # Since r15 the fused default (`_pq_fused`) never builds the n·m
-    # exploded subspace relation at all: iteration means ride
-    # `_sub_mean_partials_np` and the final codes `_codes_np`, both
-    # over the n-row vector relation (subspaces sliced in the kernel).
-    # The staged pipeline below remains the reference form.
-    fused = _pq_fused()
-    staged = None if fused else (
-        embeddings
-        .select("vec_id", F.explode(_pq_subspaces(m, sub_dim)).alias("s"))
-        .select("vec_id", "s.j", "s.sub"))
     # seed_stride > 1 spreads the k seed vectors across the corpus
     # (vec_id 0, stride, 2·stride, …) — for RESIDUAL training the
     # first k residuals are degenerate (the coarse seeds sit near
     # their own centroids, so their residuals cluster at the origin
     # and Lloyd collapses; measured recall@5·8 0.6 → 1.0 at sf0.01
     # from this one change).  stride=1 is the original raw-vector
-    # seeding, unchanged.  The seed build only ever explodes the ≤k
-    # seed rows under the fused path (identical values either way).
-    seed_src = staged if staged is not None else (
-        embeddings
-        .filter((F.col("vec_id") % seed_stride == 0)
-                & (F.col("vec_id") < k * seed_stride))
-        .select("vec_id", F.explode(_pq_subspaces(m, sub_dim)).alias("s"))
-        .select("vec_id", "s.j", "s.sub"))
-    cent = (seed_src.filter((F.col("vec_id") % seed_stride == 0)
-                            & (F.col("vec_id") < k * seed_stride))
-            .select("j", (F.col("vec_id") / seed_stride)
+    # seeding, unchanged.  Only the ≤k seed rows are exploded.
+    cent = (embeddings
+            .filter((F.col("vec_id") % seed_stride == 0)
+                    & (F.col("vec_id") < k * seed_stride))
+            .select("vec_id",
+                    F.explode(_pq_subspaces(m, sub_dim)).alias("s"))
+            .select("s.j", (F.col("vec_id") / seed_stride)
                     .cast("int").alias("cid"),
-                    F.transform("sub", lambda x: x.cast("double")).alias("cemb")))
+                    F.transform("s.sub",
+                                lambda x: x.cast("double")).alias("cemb")))
     if seed_stride > 1:
         # Strided seeding needs vec_ids 0, stride, …, (k-1)·stride to
         # EXIST; a smaller corpus would silently train < k centroids
@@ -1307,38 +991,15 @@ def pq_codes(embeddings: DataFrame, m: int = PQ_M, sub_dim: int = PQ_SUB_DIM,
                     f"vec_ids 0..{(k - 1) * seed_stride} (use stride=1 "
                     f"for small corpora)")
             _SEED_GUARD_OK.add(guard_key)
-    for it in range(iters):
-        if fused:
-            means = _sub_mean_partials_np(embeddings, cent, m, sub_dim)
-        else:
-            assign = _assign_sub(staged, cent)
-            exploded = (staged.join(assign, ["vec_id", "j"])
-                        .select("j", "cell",
-                                F.posexplode("sub").alias("pos", "val")))
-            means = (exploded.groupBy("j", "cell", "pos")
-                     .agg((F.sum(F.col("val").cast("double")
-                                 .cast("decimal(30,10)"))
-                           .cast("double") / F.count(F.lit(1))).alias("m")))
-        cent = _lloyd_ckpt(
-            means.groupBy("j", "cell")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.m).alias("cemb"))
-            .select("j", F.col("cell").alias("cid"), "cemb"),
-            is_last=it == iters - 1)
-    if fused:
-        return _codes_np(embeddings, cent, m, sub_dim), cent
-    return _codes_wide(_assign_sub(staged, cent), m), cent
-
-
-def _codes_wide(codes_long: DataFrame, m: int = PQ_M) -> DataFrame:
-    """(vec_id, j, cell) long form → (vec_id, code0..code{m-1}) — the
-    stored code layout, shared by training and the frozen-codebook
-    append encoder."""
-    codes = (codes_long.groupBy("vec_id")
-             .pivot("j", list(range(m))).agg(F.first("cell")))
-    return codes.select("vec_id", *[F.col(str(j)).alias(f"code{j}")
-                                    for j in range(m)])
+    for _ in range(iters):
+        cent = (_sub_mean_partials_np(embeddings, cent, m, sub_dim)
+                .groupBy("j", "cell")
+                .agg(F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s.m).alias("cemb"))
+                .select("j", F.col("cell").alias("cid"), "cemb")
+                .localCheckpoint(eager=True))
+    return _encode_codes(embeddings, cent, m, sub_dim), cent
 
 
 PQ_RERANK = 8  # shortlist factor: ADC keeps rerank*k, exact re-ranks
@@ -2087,7 +1748,12 @@ def embedding_covariance(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
             # int64 headroom: per-column sums of ≤n scaled products
             # must stay < 2^62 (fixture values are O(1); a corpus that
             # violated this would need |x| ~ 1e4 at 10k-row batches)
-            assert float(np.abs(X).max(initial=0.0)) ** 2 * 1e10 * n < 2 ** 62
+            mx = float(np.abs(X).max(initial=0.0))
+            if mx ** 2 * 1e10 * n >= 2 ** 62:
+                raise OverflowError(
+                    f"covariance int64 headroom guard: max |x| {mx:g} "
+                    f"over {n} rows overflows the 1e-10-scaled int64 "
+                    f"product sums")
             totals = np.zeros(len(iu[0]), dtype=np.int64)
             dsums = np.zeros(dim, dtype=np.int64)
             step = max(1, (64 << 20) // (dim * dim * 8))
@@ -3974,14 +3640,6 @@ def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS) -> DataFrame:
     distance at selection time — non-increasing by construction, and
     radius[k] bounds the optimal k-center cost within 2×.
 
-    Spark shape: a running ``dmin`` column (distance to the nearest
-    selected center) makes each round ONE scan updating against the
-    single new center (O(1) distance work per row per round, not
-    O(k)) plus a TakeOrdered(1) argmax — k scans total, the standard
-    distributed farthest-point sweep.  The per-round argmax is a
-    bounded 1-row collect (the selected set itself is ≤k rows — the
-    PCA/MMR collect discipline); ``localCheckpoint`` truncates the
-    k-deep lineage each round exactly like the Lloyd chain.
     Determinism: distances round to 9 dp, ties break by vec_id; the
     seed is the MINIMUM vec_id (deterministic for any corpus — a
     hard-coded id 0 raised a bare IndexError on corpora without it,
@@ -3991,8 +3649,8 @@ def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS) -> DataFrame:
     WHERE EXISTS guard on the seed row (ADVICE r12), the closest SQL
     analogue of the same refusal.
 
-    Since r15 (VERDICT r14 item 5) the default rides the BATCHED
-    sweep: ONE TakeOrdered(pool) corpus scan collects the ``pool``
+    Spark shape (r15, VERDICT r14 item 5) — the BATCHED sweep: ONE
+    TakeOrdered(pool) corpus scan collects the ``pool``
     globally-farthest candidates, the k−1 greedy rounds run on the
     driver over that bounded pool with EXACT Spark arithmetic
     (dimension-order float64 fold + HALF_UP-9dp rounding — the
@@ -4004,38 +3662,10 @@ def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS) -> DataFrame:
     corpus rescan with the updated dmin expression, so the greedy
     contract is preserved EXACTLY, not approximately (oracle
     unchanged, hash-verified).  Corpus scans drop from k to 1 (+1 per
-    rare uncertified pick); the k−1 n-row localCheckpoints disappear.
-    ``HK_KCENTER_KERNEL=scan`` keeps the per-round scan form — the
-    independent reference the equivalence test pins this against."""
-    if __import__("os").environ.get("HK_KCENTER_KERNEL", "batched") \
-            != "scan":
-        return _kcenter_batched(embeddings, k)
-    spark = embeddings.sparkSession
-    base = embeddings.select("vec_id", "embedding")
-
-    def dist_to(vec):
-        lits = F.array(*[F.lit(float(v)) for v in vec])
-        return F.round(_l2sq(F.col("embedding"), lits), 9)
-
-    # bounded collect: the seed row (1 row; TakeOrdered heap)
-    seed_rows = base.orderBy("vec_id").limit(1).collect()
-    if not seed_rows:
-        raise ValueError("kcenter_coreset: empty embedding corpus — "
-                         "no seed row to select")
-    seed = seed_rows[0]
-    d = base.select("vec_id", "embedding",
-                    dist_to(seed.embedding).alias("dmin"))
-    picks = [(0, int(seed.vec_id), None)]
-    for i in range(1, k):
-        d = d.localCheckpoint(eager=True)
-        # bounded collect: the round's argmax (1 row; ≤k−1 total)
-        far = d.orderBy(F.col("dmin").desc(), "vec_id").limit(1).collect()[0]
-        picks.append((i, int(far.vec_id), float(far.dmin)))
-        d = d.select("vec_id", "embedding",
-                     F.least(F.col("dmin"),
-                             dist_to(far.embedding)).alias("dmin"))
-    return one_slice_df(spark,
-        picks, "sel_order int, vec_id bigint, radius double")
+    rare uncertified pick) against the textbook sweep's k (a running
+    ``dmin`` column, one scan plus a TakeOrdered(1) argmax per round),
+    which is the test reference (tests/reference_kernels.py)."""
+    return _kcenter_batched(embeddings, k)
 
 
 def _kcenter_batched(embeddings: DataFrame, k: int = K_CENTERS,
@@ -4083,7 +3713,7 @@ def _kcenter_batched(embeddings: DataFrame, k: int = K_CENTERS,
     def collect_pool(picked_embs):
         # ONE corpus pass: an Arrow kernel computes every row's
         # current dmin (min over picks of the 9dp-rounded fold — the
-        # `_assign_cells_np` bit discipline) and pre-selects its
+        # `_assign_cells` bit discipline) and pre-selects its
         # BATCH-LOCAL top-pool rows, so the global TakeOrdered runs
         # over ≤ pool·batches rows and only those rows' embeddings
         # ever cross the Arrow boundary.  The interpreted zip_with

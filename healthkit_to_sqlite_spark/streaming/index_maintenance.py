@@ -7,11 +7,11 @@ serving index under the batch merge's own top-m order
 (`pruned_index_writer`), all composed with the manifest storage
 layer.
 
-Per micro-batch: one nearest-centroid assignment (cell) + one
-nearest-code assignment per subspace (codes) against the broadcast
-frozen quantizers — zero Lloyd iterations, zero shuffles beyond the
-assignment aggregates — then ONE ``append_batch`` publish of the
-combined (vec_id, cell, code0..code{m-1}) rows.  Exactly-once
+Per micro-batch: one Arrow pass assigns each vector its cell and
+residual, and a second encodes the residual's per-subspace codes,
+against the broadcast frozen quantizers — zero Lloyd iterations —
+then ONE ``append_batch`` publish of the combined (vec_id, cell,
+code0..code{m-1}) rows.  Exactly-once
 composes from the sink contract exactly as in
 ``streaming/maintenance.py``: a replayed micro-batch (crash between
 manifest publish and streaming-checkpoint commit) no-ops at the
@@ -34,8 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import (_assign_cells, _assign_sub,
-                                    _codes_wide, _pq_subspaces)
+from ..operators.similarity import _cells_and_residuals, _encode_codes
 from ..sinks.manifest import ManifestTable
 
 
@@ -43,19 +42,11 @@ def encode_vectors(vecs: DataFrame, cent: DataFrame,
                    book: DataFrame) -> DataFrame:
     """(vec_id, embedding) → (vec_id, cell, code0..code{m-1}) using
     the FROZEN coarse centroids and residual codebook — the same
-    assignment kernels training uses for its final pass, so streamed
-    encodings are bit-identical to a batch re-encode."""
-    cells = _assign_cells(vecs, cent)
-    res = (vecs.select("vec_id", "embedding")
-           .join(cells, "vec_id")
-           .join(F.broadcast(cent), F.col("cell") == F.col("cid"))
-           .select("vec_id",
-                   F.zip_with("embedding", "cemb",
-                              lambda x, c: x.cast("double") - c)
-                   .alias("embedding")))
-    staged = (res.select("vec_id", F.explode(_pq_subspaces()).alias("s"))
-              .select("vec_id", "s.j", "s.sub"))
-    return cells.join(_codes_wide(_assign_sub(staged, book)), "vec_id")
+    kernels the batch build uses (one Arrow pass for cell + residual,
+    one for the codes), so streamed encodings are bit-identical to a
+    batch re-encode."""
+    cells, res = _cells_and_residuals(vecs, cent)
+    return cells.join(_encode_codes(res, book), "vec_id")
 
 
 def index_append_writer(spark: SparkSession, table: ManifestTable,

@@ -40,9 +40,7 @@ def main() -> None:
             df.explain(mode="formatted")
         path = os.path.join(out_dir, f"{n}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(f"# {n} — explain(formatted), "
-                     f"HK_ASSIGN_KERNEL={os.environ.get('HK_ASSIGN_KERNEL', '(default)')}, "
-                     f"sf_dir={sf_dir}\n")
+            fh.write(f"# {n} — explain(formatted), sf_dir={sf_dir}\n")
             fh.write(buf.getvalue())
         print(f"WROTE {path}")
     spark.stop()

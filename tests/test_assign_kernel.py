@@ -1,12 +1,12 @@
-"""The Arrow-vectorized assignment kernel (``HK_ASSIGN_KERNEL=np``)
-must be a BIT-IDENTICAL twin of the broadcast-join kernel.
+"""The Arrow-vectorized assignment kernels must be BIT-IDENTICAL to the
+broadcast-join reference forms in tests/reference_kernels.py.
 
-Why the twin exists: the join kernel evaluates ``_l2sq`` through
+Why the kernels exist: the join form evaluates ``_l2sq`` through
 ``zip_with``/``aggregate`` — Catalyst higher-order functions are
 CodegenFallback (interpreted per element) — over n·K exploded
-candidate rows, and with corpus-derived K (∝ n) that term is the one
+candidate rows, and with corpus-derived K (∝ n) that term was the one
 superlinear cpu_sec in the tracked sf1 set (q_proto_prune 51× CPU for
-10× data, SCALE.md round 14).  The numpy kernel does the same fold
+10× data, SCALE.md round 14).  The numpy kernels do the same fold
 fused; these tests pin that "same" means same bits, not same-ish:
 
 - raw distances: float64 accumulation in dimension order reproduces
@@ -15,25 +15,29 @@ fused; these tests pin that "same" means same bits, not same-ish:
   cid, via exact ``Decimal(repr(d))`` rounding on the few candidates
   within 2e-9 of the unrounded minimum (rounding is monotone, so no
   other centroid can win).
-
-The suite always exercises BOTH kernels regardless of the session
-default, so a drift in either direction fails loudly.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
 from healthkit_to_sqlite_spark.catalog import load_table
 from healthkit_to_sqlite_spark.operators.similarity import (
     _assign_cells,
-    _assign_cells_np,
+    embedding_covariance,
     kmeans_centroids,
-    proto_prune,
+    pq_codes,
 )
 from healthkit_to_sqlite_spark.plans import formatted_plan
+from tests.reference_kernels import (
+    assign_cells_join,
+    assign_sub_join,
+    cells_and_residuals_join,
+    codes_wide,
+    kmeans_centroids_join,
+    pq_codes_staged,
+    subspace_rows,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -50,78 +54,54 @@ def cent(emb):
 
 def test_np_kernel_bit_identical_with_dist(emb, cent):
     # cell AND the 9dp-rounded distance (the prototypicality score
-    # consumers keep) must match the join kernel bit for bit
+    # consumers keep) must match the join form bit for bit
     a = sorted((r.vec_id, r.cell, r.dist)
-               for r in _assign_cells(emb, cent, keep_dist=True).collect())
+               for r in assign_cells_join(emb, cent, keep_dist=True).collect())
     b = sorted((r.vec_id, r.cell, r.dist)
-               for r in _assign_cells_np(emb, cent, keep_dist=True).collect())
+               for r in _assign_cells(emb, cent, keep_dist=True).collect())
     assert a == b
     assert len(a) == emb.count()
 
 
 def test_np_kernel_bit_identical_without_dist(emb, cent):
     a = sorted((r.vec_id, r.cell)
-               for r in _assign_cells(emb, cent).collect())
+               for r in assign_cells_join(emb, cent).collect())
     b = sorted((r.vec_id, r.cell)
-               for r in _assign_cells_np(emb, cent).collect())
+               for r in _assign_cells(emb, cent).collect())
     assert a == b
 
 
 def test_np_plan_has_no_join_and_no_exchange(emb, cent):
     # the kernel's reason to exist: no n·K candidate rows (no
     # BroadcastNestedLoopJoin) and no exchange at all — the join
-    # kernel's map-side-combined shuffle of n rows is gone too
-    plan = formatted_plan(_assign_cells_np(emb, cent, keep_dist=True))
+    # form's map-side-combined shuffle of n rows is gone too
+    plan = formatted_plan(_assign_cells(emb, cent, keep_dist=True))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan
 
 
-def test_env_switch_routes_and_default_is_np(emb, cent, monkeypatch):
-    # r14 flip: default (unset) rides the Arrow-vectorized kernel;
-    # HK_ASSIGN_KERNEL=join keeps the broadcast-join kernel selectable
-    # so every quantizer family A/Bs through one switch
-    monkeypatch.delenv("HK_ASSIGN_KERNEL", raising=False)
-    assert "MapInPandas" in formatted_plan(_assign_cells(emb, cent))
-    monkeypatch.setenv("HK_ASSIGN_KERNEL", "join")
-    assert "MapInPandas" not in formatted_plan(_assign_cells(emb, cent))
-
-
-def test_sub_assignment_np_bit_identical(spark, emb, monkeypatch):
-    # r14: the per-(vector, subspace) PQ assignment rides the same
-    # switch — both kernels must agree bit-for-bit on every code
+def test_sub_assignment_np_bit_identical(spark, emb):
+    # the per-(vector, subspace) argmin inside the wide-codes kernel
+    # must agree bit-for-bit with the staged join + pivot form on
+    # every code, against an arbitrary (seed-vector) codebook
     from pyspark.sql import functions as F
 
-    from healthkit_to_sqlite_spark.operators.similarity import (
-        PQ_SUB_DIM,
-        _assign_sub,
-        _assign_sub_np,
-        _pq_subspaces,
-        pq_codes,
-    )
+    from healthkit_to_sqlite_spark.operators.similarity import _encode_codes
 
-    staged = (emb.select("vec_id",
-                         F.explode(_pq_subspaces()).alias("s"))
-              .select("vec_id", "s.j", "s.sub"))
-    cent = (staged.filter(F.col("vec_id") < 8)
+    staged = subspace_rows(emb)
+    book = (staged.filter(F.col("vec_id") < 8)
             .select("j", F.col("vec_id").cast("int").alias("cid"),
                     F.transform("sub", lambda x: x.cast("double"))
                     .alias("cemb")).localCheckpoint(eager=True))
-    monkeypatch.setenv("HK_ASSIGN_KERNEL", "join")
-    a = sorted(map(tuple, _assign_sub(staged, cent).collect()))
-    b = sorted(map(tuple, _assign_sub_np(staged, cent).collect()))
+    a = sorted(map(tuple, codes_wide(assign_sub_join(staged, book)).collect()))
+    b = sorted(map(tuple, _encode_codes(emb, book).collect()))
     assert a == b
-    assert len(a) == staged.count()
-    # end-to-end: the full fused-Lloyd PQ codes agree across kernels
-    monkeypatch.setenv("HK_ASSIGN_KERNEL", "join")
-    ca = sorted(map(tuple, pq_codes(emb)[0].collect()))
-    monkeypatch.delenv("HK_ASSIGN_KERNEL", raising=False)
-    cb = sorted(map(tuple, pq_codes(emb)[0].collect()))
-    assert ca == cb
+    assert len(a) == emb.count()
 
 
-def test_residual_fusion_bit_identical(spark, emb, cent, monkeypatch):
+def test_residual_fusion_bit_identical(spark, emb, cent):
     # r15 (VERDICT r14 item 2): cells AND residuals from ONE Arrow
     # pass must equal the two-pass join form bit for bit — the
     # elementwise float64 subtraction is the JVM zip_with's exact
@@ -130,12 +110,10 @@ def test_residual_fusion_bit_identical(spark, emb, cent, monkeypatch):
         _cells_and_residuals,
     )
 
-    monkeypatch.delenv("HK_ASSIGN_KERNEL", raising=False)
     cells_n, res_n = _cells_and_residuals(emb, cent)
     cn = sorted(map(tuple, cells_n.collect()))
     rn = sorted((r.vec_id, tuple(r.embedding)) for r in res_n.collect())
-    monkeypatch.setenv("HK_ASSIGN_KERNEL", "join")
-    cells_j, res_j = _cells_and_residuals(emb, cent)
+    cells_j, res_j = cells_and_residuals_join(emb, cent)
     cj = sorted(map(tuple, cells_j.collect()))
     rj = sorted((r.vec_id, tuple(r.embedding)) for r in res_j.collect())
     assert cn == cj
@@ -143,25 +121,15 @@ def test_residual_fusion_bit_identical(spark, emb, cent, monkeypatch):
     assert len(rn) == emb.count()
 
 
-def test_fused_lloyd_means_bit_identical(spark, emb, monkeypatch):
+def test_fused_lloyd_means_bit_identical(spark, emb):
     # r15: the fused assign+mean-partials kernel must train the SAME
-    # centroids as (a) np-assign + expression means and (b) the full
-    # join reference — per-value decimal(30,10) quantization + exact
-    # integer partials make the means order/batch-boundary independent
-    def cent_rows():
-        return sorted((r.cid, tuple(r.cemb))
-                      for r in kmeans_centroids(emb).collect())
+    # centroids as the join + posexplode + decimal-aggregate reference
+    # — per-value decimal(30,10) quantization + exact integer partials
+    # make the means order/batch-boundary independent
+    def rows(df):
+        return sorted((r.cid, tuple(r.cemb)) for r in df.collect())
 
-    monkeypatch.delenv("HK_ASSIGN_KERNEL", raising=False)
-    monkeypatch.delenv("HK_LLOYD_MEANS", raising=False)
-    fused = cent_rows()
-    monkeypatch.setenv("HK_LLOYD_MEANS", "expr")
-    exprm = cent_rows()
-    monkeypatch.delenv("HK_LLOYD_MEANS", raising=False)
-    monkeypatch.setenv("HK_ASSIGN_KERNEL", "join")
-    ref = cent_rows()
-    assert fused == exprm
-    assert fused == ref
+    assert rows(kmeans_centroids(emb)) == rows(kmeans_centroids_join(emb))
 
 
 def test_fused_lloyd_means_plan_shape(spark, emb, cent):
@@ -180,19 +148,14 @@ def test_fused_lloyd_means_plan_shape(spark, emb, cent):
     assert plan.count("Exchange") <= 2  # the partial-sum aggregate only
 
 
-def test_fused_pq_means_and_codes_bit_identical(spark, emb, monkeypatch):
+def test_fused_pq_means_and_codes_bit_identical(spark, emb):
     # r15: fused PQ training (subspace slicing + sub-argmin + partial
     # sums in one pass, wide codes map-only) must equal the staged
     # explode/join/pivot reference end to end — codes AND codebook
-    from healthkit_to_sqlite_spark.operators.similarity import pq_codes
-
-    monkeypatch.delenv("HK_ASSIGN_KERNEL", raising=False)
-    monkeypatch.delenv("HK_LLOYD_MEANS", raising=False)
     codes_f, book_f = pq_codes(emb)
     cf = sorted(map(tuple, codes_f.collect()))
     bf = sorted((r.j, r.cid, tuple(r.cemb)) for r in book_f.collect())
-    monkeypatch.setenv("HK_LLOYD_MEANS", "expr")
-    codes_r, book_r = pq_codes(emb)
+    codes_r, book_r = pq_codes_staged(emb)
     cr = sorted(map(tuple, codes_r.collect()))
     br = sorted((r.j, r.cid, tuple(r.cemb)) for r in book_r.collect())
     assert cf == cr
@@ -200,27 +163,30 @@ def test_fused_pq_means_and_codes_bit_identical(spark, emb, monkeypatch):
     assert len(cf) == emb.count()
 
 
-def test_fused_codes_plan_is_map_only(spark, emb, monkeypatch):
+def test_fused_codes_plan_is_map_only(spark, emb):
     # wide codes: no pivot exchange, no Generate — one Arrow pass
-    from healthkit_to_sqlite_spark.operators.similarity import (
-        _codes_np,
-        pq_codes,
-    )
+    from healthkit_to_sqlite_spark.operators.similarity import _encode_codes
 
-    monkeypatch.delenv("HK_ASSIGN_KERNEL", raising=False)
-    monkeypatch.delenv("HK_LLOYD_MEANS", raising=False)
     _, book = pq_codes(emb)
-    plan = formatted_plan(_codes_np(emb, book.localCheckpoint(eager=True)))
+    plan = formatted_plan(_encode_codes(emb, book.localCheckpoint(eager=True)))
     assert "MapInPandas" in plan
     assert "Exchange" not in plan
     assert "Generate" not in plan
 
 
-def test_proto_prune_identical_under_join_kernel(spark, emb, monkeypatch):
-    # an end-to-end keep_dist consumer: the kept/pruned verdict and
-    # the prototypicality ordering ride the kernel unchanged
-    monkeypatch.delenv("HK_ASSIGN_KERNEL", raising=False)
-    a = sorted(map(tuple, proto_prune(emb).collect()))
-    monkeypatch.setenv("HK_ASSIGN_KERNEL", "join")
-    b = sorted(map(tuple, proto_prune(emb).collect()))
-    assert a == b
+@pytest.mark.parametrize("guard, build", [
+    pytest.param("kmeans mean-partials",
+                 lambda emb: kmeans_centroids(emb, 2), id="kmeans"),
+    pytest.param("PQ sub-mean-partials",
+                 lambda emb: pq_codes(emb, k=2)[1], id="pq"),
+    pytest.param("covariance", embedding_covariance, id="covariance"),
+])
+def test_int64_headroom_guards_raise_overflow(spark, guard, build):
+    # the exact-decimal kernels sum 1e-10-scaled values in int64; a
+    # magnitude that would wrap must fail loudly (and not vanish under
+    # python -O, as the old bare asserts did)
+    big = spark.createDataFrame(
+        [(i, "x", [1e12 * (i + 1)] * 64) for i in range(4)],
+        "vec_id bigint, label string, embedding array<float>")
+    with pytest.raises(Exception, match=f"OverflowError.*{guard}"):
+        build(big).collect()

@@ -2,7 +2,7 @@
 
 The registered `dedup_clusters` rides the large-star/small-star
 kernel (since r14, VERDICT r13 item 1); `dedup_clusters_minlabel`
-is the test-only min-label propagation audit.  The two independent
+(tests/reference_kernels.py) is the min-label propagation audit.  The two independent
 kernels must produce exactly the same component-min labels (the
 q_dedup_clusters oracle's contract), and star must converge in
 O(log n) rounds where propagation needs O(diameter) — pinned on a
@@ -17,8 +17,8 @@ from healthkit_to_sqlite_spark.catalog import load_table
 from healthkit_to_sqlite_spark.operators.pipeline import (
     connected_components_star,
     dedup_clusters,
-    dedup_clusters_minlabel,
 )
+from tests.reference_kernels import dedup_clusters_minlabel
 
 SF = "/root/testdata/sf0.001"
 

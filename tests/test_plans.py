@@ -613,7 +613,7 @@ def test_bpe_encode_serve_plan_is_map_only(spark, specs):
     argmax heaps, no per-round shuffles).  Since the r14 Arrow kernel
     the per-doc rollup happens inside the map pass, so even the
     groupBy(doc_id) exchange is gone (the expression form's 1-shuffle
-    + folded-literal-replace shape stays pinned via HK_BPE_KERNEL in
+    + folded-literal-replace shape is the reference in
     test_batch_kernels' value-identity suite)."""
     df = specs["q_bpe_encode"].build(spark, SF)
     plan = formatted_plan(df)
@@ -1061,8 +1061,8 @@ ALLOWED_BNLJ: frozenset = frozenset({
     "q_embed_covariance",
     # ≤K-row centroid table broadcast (probe-side nearest-centroid
     # joins in serve/probe shapes; K is corpus-derived).  The r14
-    # assignment-kernel flip (HK_ASSIGN_KERNEL default np) removed the
-    # TRAINER-side nested loops outright — q_dedup_semantic,
+    # Arrow assignment kernel removed the TRAINER-side nested loops
+    # outright — q_dedup_semantic,
     # q_ivf_postings and q_proto_prune left this list because their
     # only BNLJ came from the broadcast-join assignment, now a
     # mapInPandas pass with no join at all

@@ -1246,7 +1246,7 @@ def test_kcenter_matches_numpy_audit(spark, emb):
     assert got == expect
 
 
-def test_kcenter_batched_equals_scan_kernel(spark, emb, monkeypatch):
+def test_kcenter_batched_equals_scan_kernel(spark, emb):
     """r15 (VERDICT r14 item 5): the batched pool sweep must produce
     the EXACT per-round scan selection — including under a pool
     smaller than k, where every pick rides the verification rescan
@@ -1256,10 +1256,9 @@ def test_kcenter_batched_equals_scan_kernel(spark, emb, monkeypatch):
         _kcenter_batched,
         kcenter_coreset,
     )
+    from tests.reference_kernels import kcenter_scan
 
-    monkeypatch.setenv("HK_KCENTER_KERNEL", "scan")
-    ref = sorted(map(tuple, kcenter_coreset(emb).collect()))
-    monkeypatch.delenv("HK_KCENTER_KERNEL", raising=False)
+    ref = sorted(map(tuple, kcenter_scan(emb).collect()))
     got = sorted(map(tuple, kcenter_coreset(emb).collect()))
     assert got == ref
     tiny_pool = sorted(map(tuple,

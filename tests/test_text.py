@@ -980,6 +980,7 @@ def test_suffix_ranks_match_python_reference(spark):
     if they diverge later)."""
     from healthkit_to_sqlite_spark.operators.text import (SUFFIX_W,
                                                           suffix_ranks)
+    from tests.reference_kernels import suffix_ranks_py
 
     deep = "x " * (SUFFIX_W + 2)
     docs = spark.createDataFrame(
@@ -991,14 +992,7 @@ def test_suffix_ranks_match_python_reference(spark):
 
     texts = {0: "b a c a b", 1: "a b", 2: "a",
              3: deep.strip() + " y", 4: deep.strip() + " z"}
-    suf = []
-    for d, t in texts.items():
-        toks = t.split(" ")
-        for p in range(len(toks)):
-            suf.append((tuple(toks[p:p + SUFFIX_W]), d, p))
-    ordered = sorted(s[0] for s in suf)
-    want = {(d, p): 1 + ordered.index(key) for key, d, p in suf}
-    assert got == want
+    assert got == suffix_ranks_py(texts, SUFFIX_W)
     # cross-doc tie: "a b" suffix exists in doc 0 (pos 3) and doc 1
     # (pos 0) — identical depth-8 prefixes, equal ranks
     assert got[(0, 3)] == got[(1, 0)]
@@ -1017,6 +1011,7 @@ def test_suffix_ranks_all_depths_match_python_reference(spark, w):
     between).  Each must still equal true depth-w lexicographic
     ranking."""
     from healthkit_to_sqlite_spark.operators.text import suffix_ranks
+    from tests.reference_kernels import suffix_ranks_py
 
     texts = {0: "b a c a b", 1: "a b", 2: "a", 3: "c a b a",
              4: "a a a a a", 5: "b a c a c"}
@@ -1024,22 +1019,15 @@ def test_suffix_ranks_all_depths_match_python_reference(spark, w):
                                  "doc_id bigint, text string")
     got = {(r.doc_id, r.pos): r.srank
            for r in suffix_ranks(docs, w=w).collect()}
-    suf = []
-    for d, t in texts.items():
-        toks = t.split(" ")
-        for p in range(len(toks)):
-            suf.append((tuple(toks[p:p + w]), d, p))
-    ordered = sorted(s[0] for s in suf)
-    want = {(d, p): 1 + ordered.index(key) for key, d, p in suf}
-    assert got == want
+    assert got == suffix_ranks_py(texts, w)
 
 
 @pytest.mark.parametrize("w", [1, 2, 8])
-def test_suffix_kernels_value_identical(spark, monkeypatch, w):
-    """The r14 `_ranked_multiset_np` rank kernel (range-partition the
-    FULL paired multiset, Arrow adjacency counters, offsets collect)
-    must equal the r13 `_global_key_ranks` + join-back form
-    rank-for-rank — at every structural depth regime AND across Arrow
+def test_suffix_kernels_value_identical(spark, w):
+    """The `_ranked_multiset_np` rank kernel (range-partition the FULL
+    paired multiset, Arrow adjacency counters, offsets collect) must
+    equal a Python sort of the w-token prefixes rank-for-rank — at
+    every structural depth regime AND across Arrow
     batch boundaries: maxRecordsPerBatch=3 forces the kernel's
     carried counters (prev key, nrows, ndense, grank) to cross
     hundreds of batch edges, and parts=2 forces cross-partition
@@ -1047,6 +1035,7 @@ def test_suffix_kernels_value_identical(spark, monkeypatch, w):
     pairs incl. the '' sentinel) and bigint keys (later rounds) both
     cross the boundary."""
     from healthkit_to_sqlite_spark.operators.text import suffix_ranks
+    from tests.reference_kernels import suffix_ranks_py
 
     texts = {0: "b a c a b", 1: "a b", 2: "a", 3: "c a b a",
              4: "a a a a a", 5: "b a c a c",
@@ -1057,25 +1046,22 @@ def test_suffix_kernels_value_identical(spark, monkeypatch, w):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
     try:
-        monkeypatch.setenv("HK_SUFFIX_KERNEL", "join")
-        a = {(r.doc_id, r.pos): r.srank
-             for r in suffix_ranks(docs, w=w, parts=2).collect()}
-        monkeypatch.setenv("HK_SUFFIX_KERNEL", "np")
-        b = {(r.doc_id, r.pos): r.srank
-             for r in suffix_ranks(docs, w=w, parts=2).collect()}
+        got = {(r.doc_id, r.pos): r.srank
+               for r in suffix_ranks(docs, w=w, parts=2).collect()}
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert a == b
+    assert got == suffix_ranks_py(texts, w)
 
 
-def test_rare_trigram_kernels_value_identical(spark, monkeypatch):
+def test_rare_trigram_kernels_value_identical(spark):
     """The r14 Arrow distinct-trigram kernel == the positional-explode
     expression form, row for row — on the fixture corpus AND on a
     constructed edge set (doc shorter than 3 chars dropped, uppercase
     folded by the ENGINE's lower() before the kernel, repeated
     trigrams deduped, non-ASCII code points sliced at code-point
     grain)."""
-    from healthkit_to_sqlite_spark.operators.text import rare_trigram_rate
+    from healthkit_to_sqlite_spark.operators.text import _rare_tri_perdoc_np
+    from tests.reference_kernels import rare_trigrams_expr
 
     edge = spark.createDataFrame(
         [(0, "aAaAa"), (1, "xy"), (2, "ababab"), (3, "héllo héllo"),
@@ -1083,14 +1069,12 @@ def test_rare_trigram_kernels_value_identical(spark, monkeypatch):
         "doc_id bigint, text string")
     fixture = load_table(spark, SF, "documents")
     for docs in (edge, fixture):
-        monkeypatch.setenv("HK_TRI_KERNEL", "np")
-        got_np = sorted(map(tuple, rare_trigram_rate(docs).collect()))
-        monkeypatch.setenv("HK_TRI_KERNEL", "expr")
-        got_expr = sorted(map(tuple, rare_trigram_rate(docs).collect()))
+        got_np = sorted(map(tuple, _rare_tri_perdoc_np(docs).collect()))
+        got_expr = sorted(map(tuple, rare_trigrams_expr(docs).collect()))
         assert got_np == got_expr and len(got_np) > 0
 
 
-def test_ngram_kernels_value_identical(spark, monkeypatch):
+def test_ngram_kernels_value_identical(spark):
     """The r14 Arrow bigram-partials kernel == the transform-HOF
     expression form, row for row — on the fixture corpus AND on a
     constructed edge set (1-token doc yields nothing, runs of spaces
@@ -1099,6 +1083,7 @@ def test_ngram_kernels_value_identical(spark, monkeypatch):
     above the distinct-bigram count on the edge set so the WHOLE
     aggregate is compared, not just the top slice."""
     from healthkit_to_sqlite_spark.operators.text import ngram_counts
+    from tests.reference_kernels import ngram_counts_expr
 
     edge = spark.createDataFrame(
         [(0, "a b a b a"), (1, "x"), (2, "a  b"), (3, None),
@@ -1106,10 +1091,8 @@ def test_ngram_kernels_value_identical(spark, monkeypatch):
         "doc_id bigint, text string")
     fixture = load_table(spark, SF, "documents")
     for docs, k in ((edge, 100), (fixture, 20)):
-        monkeypatch.setenv("HK_NGRAM_KERNEL", "np")
         got_np = [tuple(r) for r in ngram_counts(docs, k=k).collect()]
-        monkeypatch.setenv("HK_NGRAM_KERNEL", "expr")
-        got_expr = [tuple(r) for r in ngram_counts(docs, k=k).collect()]
+        got_expr = [tuple(r) for r in ngram_counts_expr(docs, k).collect()]
         assert got_np == got_expr and len(got_np) > 0
 
 
