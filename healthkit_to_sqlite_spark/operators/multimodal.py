@@ -7,8 +7,9 @@ functions over ``mapInPandas``.
 
 The container has no image/audio codecs, so the *decode kernels* are
 deterministic fakes behind the real Spark plumbing (schema, Arrow
-batch shape, partitioning) — swap `_fake_decode_features` for a real
-`PIL/torchaudio` call and nothing else changes.  ``decode_real`` IS
+batch shape, partitioning) — swap the byte-histogram ``feats`` in
+`decode_features` for a real `PIL/torchaudio` call and nothing else
+changes.  ``decode_real`` IS
 that swap for images: a real Pillow decode kernel gated behind an
 import-try (NotImplementedError when Pillow is absent; its test is
 ``importorskip``-gated, so codec-equipped environments run it).
@@ -30,8 +31,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..spec import Spec
-
-FEATURE_DIM = 4
 
 
 def with_blob(documents: DataFrame) -> DataFrame:
@@ -55,19 +54,6 @@ def media_metadata(documents: DataFrame) -> DataFrame:
         F.col("media_meta.n_bytes").alias("n_bytes"),
         F.col("media_meta.mime").alias("mime"),
         F.col("media_meta.checksum_md5").alias("checksum_md5"))
-
-
-def _fake_decode_features(payload: bytes) -> list[float]:
-    """Deterministic stand-in for a media feature extractor: 4 moments
-    of the byte histogram.  Pure-python but executed vectorized per
-    Arrow batch inside mapInPandas."""
-    if payload is None or len(payload) == 0:
-        return [0.0] * FEATURE_DIM
-    n = float(len(payload))
-    s = float(sum(payload))
-    mx = float(max(payload))
-    mn = float(min(payload))
-    return [n, s / n, mx, mn]
 
 
 def decode_features(documents: DataFrame) -> DataFrame:

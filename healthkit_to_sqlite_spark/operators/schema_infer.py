@@ -126,41 +126,44 @@ def cast_to_tag(col: Column, tag: str) -> Column | None:
     return col.cast(target)
 
 
-def apply_inferred_types(df: DataFrame, cols: list[str] | None = None,
-                         drop_all_null: bool = False) -> DataFrame:
-    """Infer-and-cast string columns in ONE aggregate pass.
+def _tag_votes(df: DataFrame, cols: list[str], by: tuple[str, ...] = ()):
+    """Schema votes for ``cols`` in ONE aggregate, per ``by`` group:
+    collected rows carrying the ``by`` keys, column ``cols[i]``'s
+    widening-unified tag as ``t{i}`` and its non-null count as
+    ``n{i}``.  Commutative aggregates, so partial aggregation handles
+    any partitioning.
 
-    Per column: widening-unified tag (INTEGER/REAL/DATE/TIMESTAMP/TEXT)
-    plus a non-null count; then cast each column to its tag's Spark
-    type and optionally drop columns with no values at all (the
-    reference never creates a column it never saw, core.rs:216-227).
-
-    This is the distributed replacement for the reference's pass-1
-    sequential schema scan (core.rs:85-132): commutative aggregates,
-    so partial aggregation handles any partitioning."""
-    if cols is None:
-        cols = [f.name for f in df.schema.fields
-                if isinstance(f.dataType, T.StringType)]
-    if not cols:
-        return df
-    # tag each value ONCE in a projection, then aggregate the cheap tag
-    # columns: unify_tags references its input in every when-branch, so
-    # inlining type_tag would replicate the try-cast cascade per branch
-    # — at ~25 columns the generated code alone takes seconds to
-    # compile (measured 7s plan time on the Workout read)
-    proj = []
+    Each value is tagged ONCE in a projection before the aggregate:
+    unify_tags references its input in every when-branch, and codegen
+    does not CSE across conditional branches, so feeding type_tag in
+    directly re-runs the try-cast cascade per branch (measured 8×
+    slower at 400k rows, and 7 s of plan time at ~25 columns on the
+    Workout read)."""
+    proj = [F.col(k) for k in by]
     for i, c in enumerate(cols):
         proj.append(type_tag(F.col(c)).alias(f"g{i}"))
         proj.append(F.col(c).isNotNull().cast("bigint").alias(f"p{i}"))
     aggs = []
-    for i, c in enumerate(cols):
+    for i in range(len(cols)):
         aggs.append(unify_tags(F.col(f"g{i}")).alias(f"t{i}"))
         aggs.append(F.sum(F.col(f"p{i}")).alias(f"n{i}"))
-    row = df.select(*proj).agg(*aggs).collect()[0]
+    return df.select(*proj).groupBy(*by).agg(*aggs).collect()
+
+
+def apply_inferred_types(df: DataFrame) -> DataFrame:
+    """Infer-and-cast every string column in ONE aggregate pass.
+
+    Per column: the widening-unified tag (INTEGER/REAL/DATE/TIMESTAMP/
+    TEXT) from `_tag_votes`, then a cast to the tag's Spark type.
+
+    This is the distributed replacement for the reference's pass-1
+    sequential schema scan (core.rs:85-132)."""
+    cols = [f.name for f in df.schema.fields
+            if isinstance(f.dataType, T.StringType)]
+    if not cols:
+        return df
+    row = _tag_votes(df, cols)[0]
     for i, c in enumerate(cols):
-        if drop_all_null and row[f"n{i}"] == 0:
-            df = df.drop(c)
-            continue
         casted = cast_to_tag(F.col(c), row[f"t{i}"])
         if casted is not None:
             df = df.withColumn(c, casted)

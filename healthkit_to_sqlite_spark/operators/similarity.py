@@ -28,6 +28,8 @@ from ..catalog import load_table
 from ..functions import (cosine_from_norms, cosine_similarity, l2_norm,
                          one_slice_df)
 from ..spec import Spec, sql_in_list
+from .exact_np import (argmin_9dp, check_headroom, decimals, load_matrix,
+                       member_sums, quantize, sq_dist_blocks)
 
 N_PLANES = 8   # LSH signature bits
 DIM = 64       # embedding dimensionality (FIXTURES.md §B)
@@ -134,9 +136,7 @@ def lsh_signature(embeddings: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
             n = len(pdf)
             if n == 0:
                 continue
-            X = np.empty((n, dim), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
+            X = load_matrix(pdf["embedding"], dim)
             acc = np.zeros((n, n_pl), dtype=np.float64)
             for d in range(dim):            # JVM fold order: d = 0..D-1
                 acc += X[:, d, None] * W[None, :, d]
@@ -317,20 +317,9 @@ def _assign_cells(embeddings: DataFrame, cent: DataFrame,
     same FLOPs fused, and the n·K row explosion never exists.
 
     Bit-discipline (identical to the join form kept as the test
-    reference):
-
-    - distances accumulate ``(x_d - c_d)²`` in float64 in dimension
-      order — elementwise IEEE ops in a d-loop reproduce the JVM
-      ``aggregate`` fold's operation sequence exactly, so the raw
-      distances are bit-identical to the join kernel's;
-    - the argmin compares HALF_UP-rounded-9dp distances with ties →
-      lowest cid, like the join kernel's ``min(struct(round(dist,9),
-      cid))``.  Rounding is monotone, so only candidates within
-      2e-9 of the unrounded minimum can win; those few (usually one)
-      are rounded exactly via ``Decimal(repr(d))`` — the same
-      shortest-roundtrip-string + HALF_UP semantics as Spark's
-      ``round`` (BigDecimal.valueOf path) — and compared (dist, cid).
-      Everything else never leaves numpy.
+    reference): the dimension-order float64 fold and the HALF_UP-9dp
+    argmin with ties → lowest cid of `exact_np.argmin_9dp`, the join
+    kernel's ``min(struct(round(dist,9), cid))``.
 
     Scale shape: centroids ship as a SparkContext broadcast (≤K rows —
     the table the whole IVF design already keeps broadcastable), the
@@ -368,43 +357,14 @@ def _assign_cells(embeddings: DataFrame, cent: DataFrame,
         ", residual array<double>" if keep_residual else "")
 
     def assign(batches):
-        from decimal import Decimal, ROUND_HALF_UP
         C_l, cids_l = b_cent.value
-        K, D = C_l.shape
-        grid = Decimal("1e-9")
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            X = np.empty((n, D), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
-            # chunk so the (rows × K) block stays ~≤32 MB
-            step = max(1, (4 << 20) // max(K, 1))
-            cells = np.empty(n, dtype=np.int64)
-            dists = np.empty(n, dtype=np.float64)
-            idxs = np.empty(n, dtype=np.int64)
-            for lo in range(0, n, step):
-                Xb = X[lo:lo + step]
-                acc = np.zeros((len(Xb), K), dtype=np.float64)
-                for d in range(D):          # JVM fold order: d = 0..D-1
-                    t = Xb[:, d, None] - C_l[None, :, d]
-                    acc += t * t
-                m = acc.min(axis=1)
-                for i in range(len(Xb)):
-                    # candidates whose ROUNDED dist could tie the min
-                    cand = np.nonzero(acc[i] <= m[i] + 2e-9)[0]
-                    best = None
-                    for j in cand:
-                        dj = Decimal(repr(float(acc[i, j]))).quantize(
-                            grid, ROUND_HALF_UP)
-                        if best is None or (dj, cids_l[j]) < best[:2]:
-                            best = (dj, cids_l[j], j)
-                    cells[lo + i] = best[1]
-                    dists[lo + i] = float(best[0])
-                    idxs[lo + i] = best[2]
+            X = load_matrix(pdf["embedding"], C_l.shape[1])
+            idxs, dists = argmin_9dp(X, C_l, cids_l)
             out = {"vec_id": pdf["vec_id"],
-                   "cell": cells.astype("int32")}
+                   "cell": cids_l[idxs].astype("int32")}
             if keep_dist:
                 out["dist"] = dists
             if keep_residual:
@@ -435,119 +395,6 @@ def _cells_and_residuals(vectors: DataFrame,
             assigned.select("vec_id", F.col("residual").alias("embedding")))
 
 
-def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
-    """Fused Lloyd-iteration body (r15): ONE Arrow pass assigns each
-    vector to its nearest centroid (the identical argmin discipline of
-    `_assign_cells`) and accumulates the per-cell member sums as
-    exact scaled-int64 partials IN THE SAME BATCH.  The per-iteration
-    (embeddings ⋈ assignment) join with its two n-row exchanges and
-    the n·D ``posexplode`` Generate disappear; the shuffle carries
-    ≤ K·D partial rows per batch (guide §2.3/§2.4 + §4.2 — Python
-    map-side aggregation, project before the exchange).
-
-    Exactness (the `embedding_covariance` argument, r14 §2): the
-    expression form quantizes EACH member value to decimal(30,10) —
-    HALF_UP at 10 dp over the double's shortest decimal repr (Spark's
-    double→decimal cast) — and SUMs, which is exact integer
-    arithmetic in units of 1e-10 and therefore order-independent.
-    The kernel reproduces that quantization per value (np.rint on the
-    1e10-scaled value for the bulk; rounding-boundary values
-    re-quantized exactly via ``Decimal(repr(v))``), sums int64 per
-    (cell, pos) per batch, and emits decimal(30,10) partials; the
-    downstream decimal SUM and the single double division are the
-    same expressions as the reference form, so the means are
-    bit-identical at any batch or partition boundary (pinned in
-    tests/test_assign_kernel.py).  Returns the ``(cell, pos, m)``
-    relation of the expression form's ``means``."""
-    import numpy as np
-
-    rows = sorted(cent.select("cid", "cemb").collect(), key=lambda r: r.cid)
-    C = np.asarray([r.cemb for r in rows], dtype=np.float64)
-    cids = np.asarray([r.cid for r in rows], dtype=np.int64)
-    spark = embeddings.sparkSession
-    b_cent = spark.sparkContext.broadcast((C, cids))
-    src = embeddings.select("embedding")
-
-    def kern(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import numpy as np
-        import pandas as pd
-
-        C_l, cids_l = b_cent.value
-        K, D = C_l.shape
-        grid9 = Decimal("1e-9")
-        grid10 = Decimal("1e-10")
-
-        def q10(v):
-            # exact decimal(30,10) quantization as scaled int64 (the
-            # embedding_covariance q10 — see its docstring)
-            s = v * 1e10
-            r = np.rint(s)
-            sus = (np.abs(np.abs(s - r) - 0.5) < 1e-3) | (np.abs(s) > 1e14)
-            out = r.astype(np.int64)
-            if sus.any():
-                flat_v = v.ravel()
-                flat_o = out.ravel()
-                for i in np.nonzero(sus.ravel())[0]:
-                    d = Decimal(repr(float(flat_v[i]))).quantize(
-                        grid10, ROUND_HALF_UP)
-                    flat_o[i] = int(d.scaleb(10))
-                out = flat_o.reshape(out.shape)
-            return out
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            X = np.empty((n, D), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
-            # assignment: identical discipline to _assign_cells
-            step = max(1, (4 << 20) // max(K, 1))
-            lab = np.empty(n, dtype=np.int64)     # index into C_l
-            for lo in range(0, n, step):
-                Xb = X[lo:lo + step]
-                acc = np.zeros((len(Xb), K), dtype=np.float64)
-                for d in range(D):          # JVM fold order
-                    t = Xb[:, d, None] - C_l[None, :, d]
-                    acc += t * t
-                m = acc.min(axis=1)
-                for i in range(len(Xb)):
-                    cand = np.nonzero(acc[i] <= m[i] + 2e-9)[0]
-                    best = None
-                    for j in cand:
-                        dj = Decimal(repr(float(acc[i, j]))).quantize(
-                            grid9, ROUND_HALF_UP)
-                        if best is None or (dj, cids_l[j]) < best[:2]:
-                            best = (dj, cids_l[j], j)
-                    lab[lo + i] = best[2]
-            # int64 headroom: per-cell sums of ≤n scaled values must
-            # stay < 2^62 (fixture values are O(1) — see covariance)
-            mx = float(np.abs(X).max(initial=0.0))
-            if mx * 1e10 * n >= 2 ** 62:
-                raise OverflowError(
-                    f"kmeans mean-partials int64 headroom guard: "
-                    f"max |x| {mx:g} over {n} rows overflows the "
-                    f"1e-10-scaled int64 sums")
-            Q = q10(X)
-            order = np.argsort(lab, kind="stable")
-            sl = lab[order]
-            uniq, starts = np.unique(sl, return_index=True)
-            S = np.add.reduceat(Q[order], starts, axis=0)
-            cnts = np.diff(np.append(starts, n))
-            yield pd.DataFrame({
-                "cell": np.repeat(cids_l[uniq], D).astype("int32"),
-                "pos": np.tile(np.arange(D), len(uniq)).astype("int32"),
-                "s": [Decimal(int(v)).scaleb(-10) for v in S.ravel()],
-                "c": np.repeat(cnts, D).astype("int64")})
-
-    return (src.mapInPandas(kern,
-                            "cell int, pos int, s decimal(30,10), c long")
-            .groupBy("cell", "pos")
-            .agg((F.sum("s").cast("double") / F.sum("c")).alias("m")))
-
-
 def kmeans_centroids(embeddings: DataFrame,
                      n_centroids: int | None = None,
                      iters: int = IVF_ITERS) -> DataFrame:
@@ -563,14 +410,15 @@ def kmeans_centroids(embeddings: DataFrame,
     explicitly pins K.  The oracles derive the same K in SQL
     (`_derived_k_sql`).
 
-    Each round is ONE Arrow pass (`_mean_partials_np`): assign every
-    vector to its nearest centroid and emit exact per-cell partial
-    sums, so the exchange carries ≤K·D rows per batch.  Means
-    accumulate in DECIMAL(30,10) — exact and summation-order
-    independent — then divide as double, so Spark and DuckDB produce
-    bit-identical centroids regardless of partitioning (a raw double
-    sum would drift with partition order and could flip downstream
-    argmins).  A centroid that loses every member simply drops out
+    Each round is ONE Arrow pass of the PQ partials kernel
+    `_sub_mean_partials_np` with a single subspace spanning all D
+    dimensions: assign every vector to its nearest centroid and emit
+    exact per-cell partial sums, so the exchange carries ≤K·D rows
+    per batch.  Means accumulate in DECIMAL(30,10) — exact and
+    summation-order independent — then divide as double, so Spark and
+    DuckDB produce bit-identical centroids regardless of partitioning
+    (a raw double sum would drift with partition order and could flip
+    downstream argmins).  A centroid that loses every member simply drops out
     (deterministic in both engines; K shrinks).  At scale: iteration
     cost = iters × (scan + K·D-row shuffle) — the standard
     distributed k-means shape.
@@ -592,18 +440,11 @@ def kmeans_centroids(embeddings: DataFrame,
     if n_centroids is None:
         n_centroids = derived_n_centroids(embeddings.count())
     cent = (embeddings.filter(F.col("vec_id") < n_centroids)
-            .select(F.col("vec_id").cast("int").alias("cid"),
+            .select(F.lit(0).alias("j"),
+                    F.col("vec_id").cast("int").alias("cid"),
                     F.transform("embedding",
                                 lambda x: x.cast("double")).alias("cemb")))
-    for _ in range(iters):
-        cent = (_mean_partials_np(embeddings, cent)
-                .groupBy("cell")
-                .agg(F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.m).alias("cemb"))
-                .select(F.col("cell").alias("cid"), "cemb")
-                .localCheckpoint(eager=True))
-    return cent
+    return _lloyd(embeddings, cent, iters, "kmeans mean-partials").drop("j")
 
 
 def ivf_cells(embeddings: DataFrame, n_centroids: int | None = None,
@@ -753,94 +594,58 @@ def _collect_codebook(cent: DataFrame):
         for j, v in by_j.items()}
 
 
-def _sub_mean_partials_np(vectors: DataFrame, cent: DataFrame,
-                          m: int = PQ_M,
-                          sub_dim: int = PQ_SUB_DIM) -> DataFrame:
+def _sub_mean_partials_np(vectors: DataFrame, cent: DataFrame, guard: str):
     """Fused PQ-Lloyd iteration body over the UNEXPLODED n-row vector
     relation (r15): subspace slicing, the per-(vector, subspace)
     argmin (the `_assign_cells` bit discipline) and the per-(j, cell)
     member-sum partials all happen in ONE Arrow pass, so the n·m
     subspace Generate, the (vec_id, j) join-back with its exchanges
     and the n·m·sub_dim posexplode disappear; the shuffle carries
-    ≤ m·k·sub_dim partial rows per batch.  Exactness is the
-    `_mean_partials_np` argument verbatim (per-value decimal(30,10)
-    quantization, exact int64 partial sums, shared downstream
-    decimal SUM + double division) — pinned end-to-end in
-    tests/test_assign_kernel.py.  Returns the ``(j, cell, pos, m)``
-    relation of the expression form's ``means``."""
+    ≤ m·k·sub_dim partial rows per batch.  The subspace layout comes
+    from the ``(j, cid, cemb)`` codebook: m = its subspace count,
+    sub_dim = its centroid width, so a plain Lloyd k-means step is
+    the m = 1, sub_dim = D case.
+
+    Exactness (the `embedding_covariance` argument, r14 §2): the
+    expression form quantizes EACH member value to decimal(30,10) and
+    SUMs, which is exact integer arithmetic in units of 1e-10 and
+    therefore order-independent.  The kernel quantizes per value
+    (`exact_np.quantize`), sums int64 per (j, cell, pos) per batch,
+    and emits decimal(30,10) partials; the downstream decimal SUM and
+    the single double division are the same expressions as the
+    reference form, so the means are bit-identical at any batch or
+    partition boundary (pinned in tests/test_assign_kernel.py).
+    ``guard`` names the int64 headroom check in its error.
+
+    Returns ``(means, broadcast)``: the ``(j, cell, pos, m)`` relation
+    of the expression form's ``means`` and the codebook broadcast it
+    reads, for the caller to release."""
     spark = vectors.sparkSession
     b_cent = spark.sparkContext.broadcast(_collect_codebook(cent))
     src = vectors.select("embedding")
 
     def kern(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
         import numpy as np
         import pandas as pd
 
         cb = b_cent.value
-        grid9 = Decimal("1e-9")
-        grid10 = Decimal("1e-10")
-
-        def q10(v):
-            s = v * 1e10
-            r = np.rint(s)
-            sus = (np.abs(np.abs(s - r) - 0.5) < 1e-3) | (np.abs(s) > 1e14)
-            out = r.astype(np.int64)
-            if sus.any():
-                flat_v = v.ravel()
-                flat_o = out.ravel()
-                for i in np.nonzero(sus.ravel())[0]:
-                    d = Decimal(repr(float(flat_v[i]))).quantize(
-                        grid10, ROUND_HALF_UP)
-                    flat_o[i] = int(d.scaleb(10))
-                out = flat_o.reshape(out.shape)
-            return out
-
+        sub_dim = next(iter(cb.values()))[1].shape[1]
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            X = np.empty((n, m * sub_dim), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
-            mx = float(np.abs(X).max(initial=0.0))
-            if mx * 1e10 * n >= 2 ** 62:
-                raise OverflowError(
-                    f"PQ sub-mean-partials int64 headroom guard: "
-                    f"max |x| {mx:g} over {n} rows overflows the "
-                    f"1e-10-scaled int64 sums")
+            X = load_matrix(pdf["embedding"], len(cb) * sub_dim)
+            check_headroom(X, guard)
             js, cells_o, poss, ss, cs = [], [], [], [], []
             for j in sorted(cb):
                 cids, C = cb[j]
-                K, D = C.shape
                 Xj = X[:, j * sub_dim:j * sub_dim + sub_dim]
-                acc = np.zeros((n, K), dtype=np.float64)
-                for d in range(D):          # JVM fold order
-                    t = Xj[:, d, None] - C[None, :, d]
-                    acc += t * t
-                mn = acc.min(axis=1)
-                lab = np.empty(n, dtype=np.int64)
-                for i in range(n):
-                    cand = np.nonzero(acc[i] <= mn[i] + 2e-9)[0]
-                    best = None
-                    for c in cand:
-                        dj = Decimal(repr(float(acc[i, c]))).quantize(
-                            grid9, ROUND_HALF_UP)
-                        if best is None or (dj, cids[c]) < best[:2]:
-                            best = (dj, cids[c], c)
-                    lab[i] = best[2]
-                Q = q10(Xj)
-                order = np.argsort(lab, kind="stable")
-                sl = lab[order]
-                uniq, starts = np.unique(sl, return_index=True)
-                S = np.add.reduceat(Q[order], starts, axis=0)
-                cnts = np.diff(np.append(starts, n))
-                js.append(np.full(len(uniq) * D, j, dtype=np.int64))
-                cells_o.append(np.repeat(cids[uniq], D))
-                poss.append(np.tile(np.arange(D), len(uniq)))
-                ss.extend(Decimal(int(v)).scaleb(-10) for v in S.ravel())
-                cs.append(np.repeat(cnts, D))
+                lab, _ = argmin_9dp(Xj, C, cids)
+                uniq, S, cnts = member_sums(lab, quantize(Xj, 10))
+                js.append(np.full(len(uniq) * sub_dim, j, dtype=np.int64))
+                cells_o.append(np.repeat(cids[uniq], sub_dim))
+                poss.append(np.tile(np.arange(sub_dim), len(uniq)))
+                ss += decimals(S)
+                cs.append(np.repeat(cnts, sub_dim))
             yield pd.DataFrame({
                 "j": np.concatenate(js).astype("int32"),
                 "cell": np.concatenate(cells_o).astype("int32"),
@@ -848,10 +653,32 @@ def _sub_mean_partials_np(vectors: DataFrame, cent: DataFrame,
                 "s": ss,
                 "c": np.concatenate(cs).astype("int64")})
 
-    return (src.mapInPandas(
+    means = (src.mapInPandas(
         kern, "j int, cell int, pos int, s decimal(30,10), c long")
         .groupBy("j", "cell", "pos")
         .agg((F.sum("s").cast("double") / F.sum("c")).alias("m")))
+    return means, b_cent
+
+
+def _lloyd(vectors: DataFrame, cent: DataFrame, iters: int,
+           guard: str) -> DataFrame:
+    """``iters`` fused Lloyd rounds over a ``(j, cid, cemb)`` codebook,
+    every subspace ``j`` at once (`_sub_mean_partials_np`).  Each
+    round's codebook is eagerly ``localCheckpoint``ed (see
+    `kmeans_centroids`); the round's centroid broadcast is then
+    unpersisted, since the checkpoint holds its result.  ``unpersist``,
+    not ``destroy``: a recompute of a lost checkpoint block can still
+    re-read it."""
+    for _ in range(iters):
+        means, b_cent = _sub_mean_partials_np(vectors, cent, guard)
+        cent = (means.groupBy("j", "cell")
+                .agg(F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s.m).alias("cemb"))
+                .select("j", F.col("cell").alias("cid"), "cemb")
+                .localCheckpoint(eager=True))
+        b_cent.unpersist()
+    return cent
 
 
 def _encode_codes(vectors: DataFrame, book: DataFrame, m: int = PQ_M,
@@ -873,41 +700,17 @@ def _encode_codes(vectors: DataFrame, book: DataFrame, m: int = PQ_M,
         f"code{j} int" for j in range(m))
 
     def kern(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import numpy as np
-        import pandas as pd
-
         cb = b_cent.value
-        grid9 = Decimal("1e-9")
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            X = np.empty((n, m * sub_dim), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
+            X = load_matrix(pdf["embedding"], m * sub_dim)
             out = {"vec_id": pdf["vec_id"]}
             for j in range(m):
                 cids, C = cb[j]
-                K, D = C.shape
-                Xj = X[:, j * sub_dim:j * sub_dim + sub_dim]
-                acc = np.zeros((n, K), dtype=np.float64)
-                for d in range(D):          # JVM fold order
-                    t = Xj[:, d, None] - C[None, :, d]
-                    acc += t * t
-                mn = acc.min(axis=1)
-                codes = np.empty(n, dtype=np.int64)
-                for i in range(n):
-                    cand = np.nonzero(acc[i] <= mn[i] + 2e-9)[0]
-                    best = None
-                    for c in cand:
-                        dj = Decimal(repr(float(acc[i, c]))).quantize(
-                            grid9, ROUND_HALF_UP)
-                        if best is None or (dj, cids[c]) < best[:2]:
-                            best = (dj, cids[c])
-                    codes[i] = best[1]
-                out[f"code{j}"] = codes.astype("int32")
+                idx, _ = argmin_9dp(
+                    X[:, j * sub_dim:j * sub_dim + sub_dim], C, cids)
+                out[f"code{j}"] = cids[idx].astype("int32")
             yield pd.DataFrame(out)
 
     return src.mapInPandas(kern, out_schema)
@@ -991,14 +794,7 @@ def pq_codes(embeddings: DataFrame, m: int = PQ_M, sub_dim: int = PQ_SUB_DIM,
                     f"vec_ids 0..{(k - 1) * seed_stride} (use stride=1 "
                     f"for small corpora)")
             _SEED_GUARD_OK.add(guard_key)
-    for _ in range(iters):
-        cent = (_sub_mean_partials_np(embeddings, cent, m, sub_dim)
-                .groupBy("j", "cell")
-                .agg(F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.m).alias("cemb"))
-                .select("j", F.col("cell").alias("cid"), "cemb")
-                .localCheckpoint(eager=True))
+    cent = _lloyd(embeddings, cent, iters, "PQ sub-mean-partials")
     return _encode_codes(embeddings, cent, m, sub_dim), cent
 
 
@@ -1676,29 +1472,23 @@ def embedding_covariance(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
     triangle, D(D+1)/2 = 2080 rows at D=64) — the input artifact for
     PCA / whitening / Mahalanobis outlier scoring over an embedding
     column.  Since r14 this is the DECIMAL-EXACT Arrow kernel; the
-    original posexplode form survives as
-    :func:`embedding_covariance_exploded` (the independent reference
-    implementation the equivalence test pins this against).
+    original posexplode form is the independent reference the
+    equivalence test pins this against (tests/reference_kernels.py).
 
-    Why a kernel can keep the exactness contract (the r6-documented
-    blocker for :func:`embedding_covariance_fast` was that float64
-    partials are accumulation-order dependent): the contract form
+    Why a kernel can keep the exactness contract (a float64 partial
+    Gram is accumulation-order dependent): the contract form
     quantizes EACH product to decimal(30,10) — i.e. HALF_UP at 10 dp
     over the double's shortest decimal repr (Spark's double→decimal
     cast goes through BigDecimal.valueOf = Double.toString) — and
     sums the quantized values, which is exact integer arithmetic in
     units of 1e-10 and therefore order-INdependent.  The kernel
-    reproduces that quantization per product (np.rint on the 1e10-
-    scaled value for the bulk; the rare products within 1e-3 of a
-    rounding boundary — where float scaling error could flip the last
-    digit — re-quantized exactly via ``Decimal(repr(p))``, the same
-    shortest-repr + HALF_UP semantics), accumulates scaled int64
-    partials per Arrow batch, and emits them as decimal(30,10) rows;
-    the downstream SUM over decimals is exact and associative, so the
-    grand totals — and the one fixed double combine after them — are
-    bit-identical to the exploded form's, regardless of batch or
-    partition boundaries (pinned exactly, not within-epsilon, in
-    test_similarity).
+    reproduces that quantization per product (`exact_np.quantize`),
+    accumulates scaled int64 partials per Arrow batch, and emits them
+    as decimal(30,10) rows; the downstream SUM over decimals is exact
+    and associative, so the grand totals — and the one fixed double
+    combine after them — are bit-identical to the exploded form's,
+    regardless of batch or partition boundaries (pinned exactly, not
+    within-epsilon, in test_similarity).
 
     Shape vs the exploded form: the n·D(D+1)/2 product-row Generate
     (4.2 M rows at sf0.1) and its hash partial-aggregate disappear
@@ -1710,63 +1500,31 @@ def embedding_covariance(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
     vectorized pass per batch; the shuffle stays O(D²) rows per
     batch, never O(n·D²)."""
     def kernel(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
         import numpy as np
         import pandas as pd
-
-        grid = Decimal("1e-10")
-
-        def q10(v):
-            # exact decimal(30,10) quantization of each double, as
-            # scaled int64: np.rint on v*1e10 for the bulk (exact
-            # whenever the scaled value is >1e-3 clear of a rounding
-            # boundary — float scaling error is ≤~6e-5 up to |v|≤30k),
-            # Decimal(repr(v)) HALF_UP for boundary-adjacent values
-            s = v * 1e10
-            r = np.rint(s)
-            sus = (np.abs(np.abs(s - r) - 0.5) < 1e-3) | (np.abs(s) > 1e14)
-            out = r.astype(np.int64)
-            if sus.any():
-                flat_v = v.ravel()
-                flat_o = out.ravel()
-                for i in np.nonzero(sus.ravel())[0]:
-                    d = Decimal(repr(float(flat_v[i]))).quantize(
-                        grid, ROUND_HALF_UP)
-                    flat_o[i] = int(d.scaleb(10))
-                out = flat_o.reshape(out.shape)
-            return out
 
         iu = np.triu_indices(dim)
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            X = np.empty((n, dim), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
-            # int64 headroom: per-column sums of ≤n scaled products
-            # must stay < 2^62 (fixture values are O(1); a corpus that
-            # violated this would need |x| ~ 1e4 at 10k-row batches)
-            mx = float(np.abs(X).max(initial=0.0))
-            if mx ** 2 * 1e10 * n >= 2 ** 62:
-                raise OverflowError(
-                    f"covariance int64 headroom guard: max |x| {mx:g} "
-                    f"over {n} rows overflows the 1e-10-scaled int64 "
-                    f"product sums")
+            X = load_matrix(pdf["embedding"], dim)
+            # per-column sums of ≤n scaled products must stay < 2^62
+            # (fixture values are O(1); a corpus that violated this
+            # would need |x| ~ 1e4 at 10k-row batches)
+            check_headroom(X, "covariance", power=2)
             totals = np.zeros(len(iu[0]), dtype=np.int64)
             dsums = np.zeros(dim, dtype=np.int64)
             step = max(1, (64 << 20) // (dim * dim * 8))
             for lo in range(0, n, step):
                 Xb = X[lo:lo + step]
                 P = Xb[:, iu[0]] * Xb[:, iu[1]]     # float64, IEEE ==
-                totals += q10(P).sum(axis=0)        # exact scaled ints
-                dsums += q10(Xb).sum(axis=0)
+                totals += quantize(P, 10).sum(axis=0)   # exact scaled ints
+                dsums += quantize(Xb, 10).sum(axis=0)
             d1s = np.concatenate([iu[0], np.arange(dim), [-1]])
             d2s = np.concatenate([iu[1], np.full(dim, -1), [-1]])
-            vals = ([Decimal(int(t)).scaleb(-10) for t in totals]
-                    + [Decimal(int(t)).scaleb(-10) for t in dsums]
-                    + [Decimal(n)])
+            vals = decimals(np.concatenate([totals, dsums])) \
+                + decimals([n], scale=0)
             yield pd.DataFrame({"d1": d1s.astype("int32"),
                                 "d2": d2s.astype("int32"),
                                 "v": vals})
@@ -1793,134 +1551,11 @@ def embedding_covariance(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
                   F.col("v").cast("double").alias("sx2")))
     cov = (F.col("sxy") - F.col("sx1") * F.col("sx2") / F.col("n")) \
         / F.col("n")
-    # + 0.0 canonicalizes IEEE negative zero (see the exploded form)
-    return (prods.join(F.broadcast(m1), "d1")
-            .join(F.broadcast(m2), "d2")
-            .select("d1", "d2",
-                    (F.round(cov, 6) + F.lit(0.0)).alias("cov")))
-
-
-def embedding_covariance_exploded(embeddings: DataFrame) -> DataFrame:
-    """The original chained-posexplode covariance (the r14 contract
-    kernel's independent reference implementation — the equivalence
-    test pins :func:`embedding_covariance` EXACTLY equal to this).
-
-    Shape: one scan, two chained ``posexplode``s — the second over
-    ``slice(embedding, d1+1, D−d1)`` so ONLY the upper triangle is
-    ever generated (D(D+1)/2 rows per input row instead of exploding
-    all D² and filtering; r7 A/B at sf0.1: first-call 8.5 → 6.0 s,
-    median-of-3 ~6.2-6.7 → 5.6-6.0 s — modest, because the kept
-    products' decimal partial-agg dominates, not the discarded
-    generation; bit-identical 2080-row output since the product
-    multiset is unchanged) — feeding each row's products straight
-    into a groupBy(d1, d2) whose MAP-SIDE partial aggregation
-    collapses every partition to ≤2080 rows before the exchange — the
-    shuffle carries O(D²) rows total, never O(n·D²); per-dimension
-    sums ride a second cheap scan and broadcast-join back (D rows).
-    (The chained-Generate form measured 5.8 s vs 9.4 s at sf0.1 for a
-    per-row 2080-struct array build — Generate streams, a giant
-    in-row array materializes.)  Sums accumulate in DECIMAL(30,10)
-    (exact, summation-order independent) and the covariance combines
-    them in ONE fixed double expression, so both engines produce
-    bit-identical matrices regardless of partitioning.  At 100 TB the
-    per-row D²/2 product cost can be traded for the numpy partial-Gram
-    `mapInPandas` kernel implemented as
-    :func:`embedding_covariance_fast` (X^T X per Arrow batch; 0.7 s vs
-    5.7 s at sf0.1, pinned equal within 1e-6 in test_similarity) —
-    faster, but float64 partials are accumulation-order dependent, so
-    the exact-decimal form stays the verification contract."""
-    prods = (embeddings
-             .select("embedding", F.posexplode("embedding").alias("d1", "x1"))
-             .select("d1", "x1",
-                     F.posexplode(F.slice(F.col("embedding"),
-                                          F.col("d1") + 1,
-                                          F.size("embedding")
-                                          - F.col("d1")))
-                     .alias("off", "x2"))
-             .select("d1", (F.col("d1") + F.col("off")).alias("d2"),
-                     (F.col("x1").cast("double")
-                      * F.col("x2").cast("double")).alias("p"))
-             .groupBy("d1", "d2")
-             .agg(F.sum(F.col("p").cast("decimal(30,10)"))
-                  .cast("double").alias("sxy")))
-    dims = (embeddings.select(F.posexplode("embedding").alias("d0", "x"))
-            .groupBy("d0")
-            .agg(F.sum(F.col("x").cast("double").cast("decimal(30,10)"))
-                 .cast("double").alias("sx"),
-                 F.count(F.lit(1)).alias("n")))
-    m1 = dims.select(F.col("d0").cast("int").alias("d1"),
-                     F.col("sx").alias("sx1"), "n")
-    m2 = dims.select(F.col("d0").cast("int").alias("d2"),
-                     F.col("sx").alias("sx2"))
-    cov = (F.col("sxy") - F.col("sx1") * F.col("sx2") / F.col("n")) \
-        / F.col("n")
     # + 0.0 canonicalizes IEEE negative zero: DuckDB's ROUND keeps the
     # sign of a tiny negative rounded to zero, Spark's does not, and
-    # -0.0 == 0.0 compares equal but STRINGIFIES differently — the
-    # driver's value hash (and any sorted-row compare) would diverge.
+    # -0.0 == 0.0 compares equal but STRINGIFIES differently
     return (prods.join(F.broadcast(m1), "d1")
             .join(F.broadcast(m2), "d2")
-            .select("d1", "d2",
-                    (F.round(cov, 6) + F.lit(0.0)).alias("cov")))
-
-
-def embedding_covariance_fast(embeddings: DataFrame,
-                              dim: int = DIM) -> DataFrame:
-    """The documented performance twin of :func:`embedding_covariance`
-    (VERDICT r6 item 6): a numpy partial-Gram ``mapInPandas`` kernel —
-    each Arrow batch computes its own X·Xᵀ upper triangle (one BLAS
-    ``X.T @ X``), per-dimension sums, and count, emitting ≤ D(D+1)/2
-    + D + 1 tiny rows per batch; a groupBy(d1, d2) then SUMs the
-    float64 partials (map-side combine keeps the shuffle ≤2080 rows
-    per partition, same bound as the contract form) and one fixed
-    final expression produces the covariance.
-
-    NOT a contract query: float64 partial sums are accumulation-order
-    dependent (batch boundaries move with partitioning), so this
-    kernel cannot promise the bit-identical cross-engine hash the
-    decimal form does — the decimal form stays the oracle, and
-    test_similarity pins this kernel equal to it within 1e-6
-    elementwise.  Measured at sf0.1 local[32] (median of 3, noop
-    sink): 0.7 s vs the contract form's 5.7 s (×8) — the honest price of
-    the exactness contract, now quantified both ways.
-
-    Row encoding from the kernel: (d1, d2 ≥ d1) = partial product
-    sum; (d, -1) = partial per-dim sum; (-1, -1) = partial row count
-    (exact in double far beyond any batch size)."""
-    import numpy as np  # noqa: F401 — documents the kernel dependency
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        iu = np.triu_indices(dim)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            G = X.T @ X
-            d1s = np.concatenate([iu[0], np.arange(dim), [-1]])
-            d2s = np.concatenate([iu[1], np.full(dim, -1), [-1]])
-            vs = np.concatenate([G[iu], X.sum(axis=0),
-                                 [float(len(pdf))]])
-            yield pd.DataFrame({"d1": d1s.astype("int32"),
-                                "d2": d2s.astype("int32"), "v": vs})
-
-    parts = (embeddings.select("embedding")
-             .mapInPandas(kernel, schema="d1 int, d2 int, v double")
-             .groupBy("d1", "d2").agg(F.sum("v").alias("v")))
-    prods = (parts.filter(F.col("d2") >= 0)
-             .select("d1", "d2", F.col("v").alias("sxy")))
-    m1 = (parts.filter((F.col("d2") == -1) & (F.col("d1") >= 0))
-          .select("d1", F.col("v").alias("sx1")))
-    m2 = m1.select(F.col("d1").alias("d2"), F.col("sx1").alias("sx2"))
-    n = (parts.filter(F.col("d1") == -1)
-         .select(F.col("v").alias("n")))
-    cov = (F.col("sxy") - F.col("sx1") * F.col("sx2") / F.col("n")) \
-        / F.col("n")
-    return (prods.join(F.broadcast(m1), "d1")
-            .join(F.broadcast(m2), "d2")
-            .crossJoin(F.broadcast(n))
             .select("d1", "d2",
                     (F.round(cov, 6) + F.lit(0.0)).alias("cov")))
 
@@ -3677,8 +3312,6 @@ def _kcenter_batched(embeddings: DataFrame, k: int = K_CENTERS,
     pool is ~1 MB — a bounded TakeOrdered heap, never corpus-shaped).
     The verification rescan keeps correctness independent of the
     choice (pinned at pool=3 in test_similarity)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     import numpy as np
 
     spark = embeddings.sparkSession
@@ -3699,14 +3332,15 @@ def _kcenter_batched(embeddings: DataFrame, k: int = K_CENTERS,
         raise ValueError("kcenter_coreset: empty embedding corpus — "
                          "no seed row to select")
     seed = base.filter(F.col("vec_id") == mn).limit(1).collect()[0]
-    grid = Decimal("1e-9")
 
-    def r9(v: float) -> float:
-        # Spark round(x, 9): HALF_UP over the double's shortest
-        # decimal repr (BigDecimal.valueOf path) — the repo-wide
-        # rounding convention every np kernel reproduces
-        return float(Decimal(repr(float(v))).quantize(
-            grid, ROUND_HALF_UP))
+    def dmin9(X, P):
+        # per row of X: min over the rows of P of Spark's
+        # round(l2sq, 9) — dimension-order fold, HALF_UP at 9 dp; the
+        # int → double division is correctly rounded below 2^53
+        out = np.empty(len(X), dtype=np.float64)
+        for lo, acc in sq_dist_blocks(X, P):
+            out[lo:lo + len(acc)] = quantize(acc, 9).min(axis=1) / 1e9
+        return out
 
     vt = base.schema["vec_id"].dataType.simpleString()
 
@@ -3722,45 +3356,14 @@ def _kcenter_batched(embeddings: DataFrame, k: int = K_CENTERS,
         P = np.asarray(picked_embs, dtype=np.float64)
 
         def kern(batches):
-            from decimal import ROUND_HALF_UP, Decimal
-
             import numpy as np
             import pandas as pd
 
-            grid10 = Decimal("1e-9")
-
-            def r9v(v):
-                # vectorized Spark round(x, 9): rint on the 1e9-scaled
-                # value, rounding-boundary stragglers re-quantized via
-                # the exact shortest-repr HALF_UP path; the final
-                # int/1e9 division is correctly rounded, matching
-                # float(Decimal(n).scaleb(-9)) bit for bit
-                s = v * 1e9
-                r = np.rint(s)
-                sus = (np.abs(np.abs(s - r) - 0.5) < 1e-3) \
-                    | (np.abs(s) > 1e14)
-                if sus.any():
-                    for i in np.nonzero(sus)[0]:
-                        d = Decimal(repr(float(v[i]))).quantize(
-                            grid10, ROUND_HALF_UP)
-                        r[i] = float(d.scaleb(9))
-                return r / 1e9
-
             for pdf in batches:
-                n = len(pdf)
-                if n == 0:
+                if len(pdf) == 0:
                     continue
-                X = np.empty((n, P.shape[1]), dtype=np.float64)
-                for i, e in enumerate(pdf["embedding"]):
-                    X[i] = np.asarray(e, dtype=np.float64)
-                dmins = None
-                for p in P:
-                    acc = np.zeros(n, dtype=np.float64)
-                    for d in range(P.shape[1]):     # JVM fold order
-                        t = X[:, d] - p[d]
-                        acc += t * t
-                    nd = r9v(acc)
-                    dmins = nd if dmins is None else np.minimum(dmins, nd)
+                X = load_matrix(pdf["embedding"], P.shape[1])
+                dmins = dmin9(X, P)
                 ids_b = pdf["vec_id"].to_numpy()
                 top = np.lexsort((ids_b, -dmins))[:pool]
                 yield pd.DataFrame({
@@ -3811,14 +3414,8 @@ def _kcenter_batched(embeddings: DataFrame, k: int = K_CENTERS,
         picks.append((i, int(ids[j]), float(dm[j])))
         c = X[j]
         picked_embs.append([float(v) for v in c])
-        # update pool dmins exactly as Spark would: dimension-order
-        # float64 fold, HALF_UP-9dp round, least as double min
-        acc = np.zeros(len(ids), dtype=np.float64)
-        for d in range(X.shape[1]):          # JVM fold order
-            t = X[:, d] - c[d]
-            acc += t * t
-        nd = np.asarray([r9(v) for v in acc], dtype=np.float64)
-        dm = np.minimum(dm, nd)
+        # update pool dmins exactly as Spark would: least as double min
+        dm = np.minimum(dm, dmin9(X, c[None, :]))
         i += 1
     return one_slice_df(spark,
         picks, "sel_order int, vec_id bigint, radius double")

@@ -484,25 +484,11 @@ def record_tables_onepass(records: DataFrame) -> dict[str, DataFrame]:
     column pruning; the collect is bounded at one row per HK type
     (~100s).  This is the scan-count winner whenever the staged
     relation is large and types are many."""
-    from ..operators.schema_infer import cast_to_tag, type_tag, unify_tags
+    from ..operators.schema_infer import _tag_votes, cast_to_tag
 
     str_cols = [f.name for f in records.schema.fields
                 if isinstance(f.dataType, T.StringType) and f.name != "type"]
-    # materialize each value's tag ONCE in a projection before the
-    # aggregate: unify_tags references its input in every when-branch,
-    # and codegen does not CSE across conditional branches — feeding
-    # type_tag(...) in directly re-runs the try-cast cascade per branch
-    # (measured 8× slower at 400k rows)
-    proj = [F.col("type")]
-    for i, c in enumerate(str_cols):
-        proj.append(type_tag(F.col(c)).alias(f"g{i}"))
-        proj.append(F.col(c).isNotNull().cast("bigint").alias(f"p{i}"))
-    tagged = records.select(*proj)
-    aggs = []
-    for i, c in enumerate(str_cols):
-        aggs.append(unify_tags(F.col(f"g{i}")).alias(f"t{i}"))
-        aggs.append(F.sum(F.col(f"p{i}")).alias(f"n{i}"))
-    votes = tagged.groupBy("type").agg(*aggs).collect()
+    votes = _tag_votes(records, str_cols, by=("type",))
 
     out: dict[str, DataFrame] = {}
     for row in sorted(votes, key=lambda r: r["type"]):

@@ -27,7 +27,7 @@ from healthkit_to_sqlite_spark.operators.similarity import (
     IVF_ITERS, K_CENTERS, PQ_K, PQ_M, PQ_SUB_DIM, _l2sq, _plane_weights,
     _pq_subspaces, derived_n_centroids)
 
-# --- similarity: sign-LSH, assignment, Lloyd, PQ, k-center -----------------
+# --- similarity: sign-LSH, assignment, Lloyd, PQ, k-center, covariance -----
 
 
 def lsh_signature_expr(embeddings: DataFrame, n_planes: int) -> DataFrame:
@@ -182,6 +182,45 @@ def kcenter_scan(embeddings: DataFrame, k: int = K_CENTERS) -> DataFrame:
                              dist_to(far.embedding)).alias("dmin"))
     return one_slice_df(spark, picks,
                         "sel_order int, vec_id bigint, radius double")
+
+
+def embedding_covariance_exploded(embeddings: DataFrame) -> DataFrame:
+    """Covariance upper triangle by two chained ``posexplode``s (the
+    second over ``slice(embedding, d1+1, D−d1)``, so only the upper
+    triangle is generated) feeding a decimal(30,10) ``groupBy(d1,
+    d2)`` SUM; per-dimension sums ride a second scan and broadcast-join
+    back.  The covariance combines the sums in one fixed double
+    expression."""
+    prods = (embeddings
+             .select("embedding", F.posexplode("embedding").alias("d1", "x1"))
+             .select("d1", "x1",
+                     F.posexplode(F.slice(F.col("embedding"),
+                                          F.col("d1") + 1,
+                                          F.size("embedding")
+                                          - F.col("d1")))
+                     .alias("off", "x2"))
+             .select("d1", (F.col("d1") + F.col("off")).alias("d2"),
+                     (F.col("x1").cast("double")
+                      * F.col("x2").cast("double")).alias("p"))
+             .groupBy("d1", "d2")
+             .agg(F.sum(F.col("p").cast("decimal(30,10)"))
+                  .cast("double").alias("sxy")))
+    dims = (embeddings.select(F.posexplode("embedding").alias("d0", "x"))
+            .groupBy("d0")
+            .agg(F.sum(F.col("x").cast("double").cast("decimal(30,10)"))
+                 .cast("double").alias("sx"),
+                 F.count(F.lit(1)).alias("n")))
+    m1 = dims.select(F.col("d0").cast("int").alias("d1"),
+                     F.col("sx").alias("sx1"), "n")
+    m2 = dims.select(F.col("d0").cast("int").alias("d2"),
+                     F.col("sx").alias("sx2"))
+    cov = (F.col("sxy") - F.col("sx1") * F.col("sx2") / F.col("n")) \
+        / F.col("n")
+    # + 0.0 canonicalizes IEEE negative zero, as the kernel does
+    return (prods.join(F.broadcast(m1), "d1")
+            .join(F.broadcast(m2), "d2")
+            .select("d1", "d2",
+                    (F.round(cov, 6) + F.lit(0.0)).alias("cov")))
 
 
 # --- dedup: shingles, minhash, paragraphs, simhash ---------------------------

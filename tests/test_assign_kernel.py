@@ -12,7 +12,7 @@ fused; these tests pin that "same" means same bits, not same-ish:
 - raw distances: float64 accumulation in dimension order reproduces
   the JVM fold's IEEE operation sequence exactly;
 - the argmin contract: HALF_UP-rounded-9dp distance, ties → lowest
-  cid, via exact ``Decimal(repr(d))`` rounding on the few candidates
+  cid, via exact shortest-repr decimal rounding on the few candidates
   within 2e-9 of the unrounded minimum (rounding is monotone, so no
   other centroid can win).
 """
@@ -136,12 +136,17 @@ def test_fused_lloyd_means_plan_shape(spark, emb, cent):
     # the kernel's reason to exist: per iteration the corpus crosses
     # ONE MapInPandas with a ≤K·D-row partial exchange — no join of
     # the n-row assignment back onto the corpus, no posexplode
-    # Generate over n·D rows
+    # Generate over n·D rows.  A Lloyd step is the PQ partials kernel
+    # over one subspace spanning all D dimensions.
+    from pyspark.sql import functions as F
+
     from healthkit_to_sqlite_spark.operators.similarity import (
-        _mean_partials_np,
+        _sub_mean_partials_np,
     )
 
-    plan = formatted_plan(_mean_partials_np(emb, cent))
+    book = cent.select(F.lit(0).alias("j"), "cid", "cemb")
+    plan = formatted_plan(
+        _sub_mean_partials_np(emb, book, "kmeans mean-partials")[0])
     assert "MapInPandas" in plan
     assert "Generate" not in plan
     assert "Join" not in plan
@@ -190,3 +195,25 @@ def test_int64_headroom_guards_raise_overflow(spark, guard, build):
         "vec_id bigint, label string, embedding array<float>")
     with pytest.raises(Exception, match=f"OverflowError.*{guard}"):
         build(big).collect()
+
+
+def test_lloyd_unpersists_each_iteration_broadcast(spark, emb, monkeypatch):
+    # each Lloyd round ships its centroids as a broadcast; once the
+    # round's eager localCheckpoint holds the new codebook the
+    # broadcast is released — one unpersist per iteration, in both
+    # trainers
+    from pyspark.broadcast import Broadcast
+
+    released = []
+    unpersist = Broadcast.unpersist
+
+    def counting(self, blocking=False):
+        released.append(self._jbroadcast.id())
+        unpersist(self, blocking)
+
+    monkeypatch.setattr(Broadcast, "unpersist", counting)
+    kmeans_centroids(emb, 4, iters=3)
+    assert len(released) == len(set(released)) == 3
+    released.clear()
+    pq_codes(emb, k=4, iters=2)
+    assert len(released) == len(set(released)) == 2
